@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .memo import release
+
 __all__ = ["connected_components"]
 
 
@@ -66,7 +68,7 @@ def connected_components(
     labels = (
         sym.select(F.col("u").alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("lbl"))
+        .select("node", F.col("node").alias("cluster"))
         .localCheckpoint(eager=True)
     )
     live = sym  # current contracted edge set (starts as the input graph)
@@ -82,28 +84,33 @@ def connected_components(
         nmin = (
             live.join(labels, live["v"] == labels["node"])
             .groupBy("u")
-            .agg(F.min("lbl").alias("nmin"))
+            .agg(F.min("cluster").alias("nmin"))
         )
         stepped = labels.join(nmin, labels["node"] == nmin["u"], "left").select(
             "node",
-            F.least(F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))).alias(
-                "lbl"
-            ),
+            F.least(
+                F.col("cluster"), F.coalesce(F.col("nmin"), F.col("cluster"))
+            ).alias("cluster"),
         )
-        # 2. pointer jump: lbl <- lbl(lbl)
-        jump_src = stepped.select(F.col("node").alias("jn"), F.col("lbl").alias("jl"))
+        # 2. pointer jump: cluster <- cluster(cluster)
+        jump_src = stepped.select(
+            F.col("node").alias("jn"), F.col("cluster").alias("jl")
+        )
         jumped = stepped.join(
-            jump_src, stepped["lbl"] == jump_src["jn"], "left"
-        ).select("node", F.coalesce(F.col("jl"), F.col("lbl")).alias("lbl"))
+            jump_src, stepped["cluster"] == jump_src["jn"], "left"
+        ).select("node", F.coalesce(F.col("jl"), F.col("cluster")).alias("cluster"))
         jumped = jumped.localCheckpoint(eager=True)
         changed = (
             jumped.join(
-                labels.select(F.col("node").alias("pn"), F.col("lbl").alias("pl")),
+                labels.select(F.col("node").alias("pn"), F.col("cluster").alias("pl")),
                 jumped["node"] == F.col("pn"),
             )
-            .where(F.col("lbl") != F.col("pl"))
+            .where(F.col("cluster") != F.col("pl"))
             .count()
         )
+        # each replaced round is released as soon as its successor is
+        # materialized: checkpoint blocks are not freed by garbage collection
+        release(labels)
         labels = jumped
         if changed == 0:
             break
@@ -111,9 +118,9 @@ def connected_components(
         # that became internal to a cluster, dedupe.  Labels are monotone, so
         # contracting through newer labels preserves the quotient
         # connectivity; the final uniformity check below guards the claim.
-        lu = labels.select(F.col("node").alias("cu"), F.col("lbl").alias("lu"))
-        lv = labels.select(F.col("node").alias("cv"), F.col("lbl").alias("lv"))
-        live = (
+        lu = labels.select(F.col("node").alias("cu"), F.col("cluster").alias("lu"))
+        lv = labels.select(F.col("node").alias("cv"), F.col("cluster").alias("lv"))
+        contracted = (
             live.join(lu, live["u"] == lu["cu"])
             .join(lv, live["v"] == lv["cv"])
             .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
@@ -121,14 +128,19 @@ def connected_components(
             .distinct()
             .localCheckpoint(eager=True)
         )
+        if live is not sym:
+            release(live)
+        live = contracted
+    if live is not sym:
+        release(live)
     if stats is not None:
         stats["rounds"] = rounds
 
     # Fixpoint certificate over the ORIGINAL edges: every edge's endpoints
     # must share a label.  With the monotone member-valued label invariant
     # this proves each component is uniformly labeled with its minimum id.
-    lu = labels.select(F.col("node").alias("cu"), F.col("lbl").alias("lu"))
-    lv = labels.select(F.col("node").alias("cv"), F.col("lbl").alias("lv"))
+    lu = labels.select(F.col("node").alias("cu"), F.col("cluster").alias("lu"))
+    lv = labels.select(F.col("node").alias("cv"), F.col("cluster").alias("lv"))
     violations = (
         sym.join(lu, sym["u"] == lu["cu"])
         .join(lv, sym["v"] == lv["cv"])
@@ -140,6 +152,6 @@ def connected_components(
         raise AssertionError(
             f"connected_components fixpoint violated on {violations} edges"
         )
-    # labels is a checkpointed leaf: O(|V|) rows, shallow plan — callers own
-    # its lifecycle (the checkpoint blocks free on garbage collection)
-    return labels.select(F.col("node"), F.col("lbl").alias("cluster"))
+    # the labels are a checkpointed leaf: O(|V|) rows, shallow plan.  The
+    # caller owns its blocks (engine.memo.release frees them)
+    return labels

@@ -55,26 +55,13 @@ from ..kernel import hierarchy as h
 from ..kernel.covering import RegionCoverer
 from ..kernel.region import Cap
 from .join import covering_join
+from .memo import hold
 
 import numpy as np
 
 _COVER_SCHEMA = (
     "region_id string, cover_cell long, cover_level int, range_min long, range_max long"
 )
-
-# Persisted intermediates (candidate blocks + input projections) registered
-# for reclamation by queries.clear_geo_cache / the bench harness.  Keyed
-# list, not dict: entries are unpersisted and dropped together.
-_KNN_PERSISTS: list[DataFrame] = []
-
-
-def clear_knn_cache() -> None:
-    for df in _KNN_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _KNN_PERSISTS.clear()
 
 
 def _gen_coverings(max_cells: int):
@@ -121,7 +108,8 @@ def knn_cellring(
     (query_id, id_col, rank, d2) for the exact k nearest docs per query.
 
     Query ids must not contain '|' (used as the round-tag separator in the
-    composite covering key).
+    composite covering key).  The persisted candidate blocks the result
+    reads are held in the session memo until its next clear.
     """
     coverer = RegionCoverer(max_cells=12)
     if any("|" in qid for qid, *_ in queries):
@@ -133,8 +121,7 @@ def knn_cellring(
     lvl = docs_tiled.storageLevel
     we_persisted = not (lvl.useMemory or lvl.useDisk)
     if we_persisted:
-        proj = proj.persist()
-        _KNN_PERSISTS.append(proj)
+        proj = hold(spark, proj.persist())
     px = F.cos(F.radians("lat")) * F.cos(F.radians("lng"))
     py = F.cos(F.radians("lat")) * F.sin(F.radians("lng"))
     pz = F.sin(F.radians("lat"))
@@ -161,12 +148,12 @@ def knn_cellring(
         # (query, round) rows); persisted because both the levels probe and
         # the covering join consume it
         nslices = max(1, min(len(qrows) // 8, spark.sparkContext.defaultParallelism))
-        coverings = (
+        coverings = hold(
+            spark,
             qdf.repartition(nslices)
             .mapInPandas(_gen_coverings(coverer.max_cells), schema=_COVER_SCHEMA)
-            .persist()
+            .persist(),
         )
-        _KNN_PERSISTS.append(coverings)
         levels = sorted(
             r["cover_level"]
             for r in coverings.select("cover_level").distinct().collect()
@@ -183,13 +170,13 @@ def knn_cellring(
         # keep only verified in-radius candidates BEFORE anything shuffles:
         # bounds both the count agg and the persisted block to docs actually
         # inside each round's cap
-        cand = (
+        cand = hold(
+            spark,
             cand.withColumn("d2", d2)
             .where(F.col("d2") <= F.col("r2"))
             .select("query_id", "round", id_col, "d2")
-            .persist()
+            .persist(),
         )
-        _KNN_PERSISTS.append(cand)
         # ONE aggregation: each query's smallest round holding >= k in-radius
         # candidates (done/pending transition entirely distributed)
         done = (

@@ -151,18 +151,6 @@ SELECT event_id, cell_id, {_parent_from_pos(10)} AS cell_l10 FROM leaf
 """
 
 
-def _derived_cell_duck() -> str:
-    x1 = f"((event_id * {specs.LCG_A} + {specs.LCG_C}) % {specs.LCG_M})"
-    x2 = f"(({x1} * {specs.LCG_A} + {specs.LCG_C}) % {specs.LCG_M})"
-    lvl = "(event_id % 31)"
-    pos60 = f"(({x1} % 1073741824) * 1073741824 + ({x2} % 1073741824))"
-    pos61 = f"({pos60} * 2 + 1)"
-    lsbv = f"(1::BIGINT << CAST(2 * (30 - {lvl}) AS INT))"
-    cellpos = f"({pos61} - ({pos61} % (2 * {lsbv})) + {lsbv})"
-    sface = "((event_id % 6) - (CASE WHEN (event_id % 6) >= 4 THEN 8 ELSE 0 END))"
-    return f"({sface} * {POW61} + {cellpos})"
-
-
 def o_cell_hierarchy() -> str:
     x1 = f"((event_id * {specs.LCG_A} + {specs.LCG_C}) % {specs.LCG_M})"
     x2 = f"(({x1} * {specs.LCG_A} + {specs.LCG_C}) % {specs.LCG_M})"

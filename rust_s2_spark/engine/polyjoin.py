@@ -28,6 +28,7 @@ from ..kernel import hierarchy as h
 from ..kernel.covering import RegionCoverer
 from ..kernel.pip import Loop
 from .join import covering_join
+from .memo import memo
 
 __all__ = ["loop_regions", "loop_join"]
 
@@ -83,13 +84,9 @@ def broadcast_memo_key(spark: SparkSession, bc) -> tuple:
     return (spark.sparkContext.applicationId, bc._jbroadcast.id())
 
 
-# Driver-side memo of broadcasts whose payload is a pure function of a tag
-# (spec constants, or data identified by the tag itself, e.g. an sf_dir).
-_BC_CACHE: dict[tuple, object] = {}
-
-
 def session_broadcast(spark: SparkSession, tag: tuple | str, make):
-    """ONE broadcast per (SparkContext, tag), built lazily via ``make()``.
+    """ONE broadcast per (SparkContext, tag), built lazily via ``make()``
+    and held in the session memo until its clear.
 
     Re-invoking a query used to re-pickle + re-ship its broadcast payload
     and — because the executor memos key on the broadcast id — rebuild the
@@ -97,33 +94,10 @@ def session_broadcast(spark: SparkSession, tag: tuple | str, make):
     warm run.  Deterministic payloads (spec polygons, per-dataset
     centroids) get a stable tag instead, so warm runs reuse both the
     shipped blocks and the executor memos.  The tag must fully identify
-    the payload: include the sf_dir for data-derived payloads.
+    the payload: include the sf_dir for data-derived payloads, which are
+    rebuilt from the (possibly rewritten) source after a clear.
     """
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, tag)
-    bc = _BC_CACHE.get(key)
-    if bc is None:
-        # drop entries from stopped contexts: their broadcasts can't be
-        # reclaimed through Spark anymore, but releasing the references
-        # lets the driver-side payloads be GC'd
-        for k in [k for k in _BC_CACHE if k[0] != app_id]:
-            del _BC_CACHE[k]
-        _BC_CACHE[key] = bc = spark.sparkContext.broadcast(make())
-    return bc
-
-
-def clear_session_broadcasts() -> None:
-    """Unpersist + drop every memoized session broadcast (reclamation hook,
-    called from queries.clear_geo_cache): data-derived payloads (e.g. IVF
-    centroids tagged by sf_dir) must be rebuilt from the — possibly
-    rewritten — source after a clear, same contract as the clustered-table
-    and file-listing memos."""
-    for bc in _BC_CACHE.values():
-        try:
-            bc.unpersist()
-        except Exception:
-            pass
-    _BC_CACHE.clear()
+    return memo(spark, None, ("broadcast", tag), lambda: spark.sparkContext.broadcast(make()))
 
 
 def _pip_refine_udf(spark: SparkSession, verts: dict[str, np.ndarray], tag: str | None = None):

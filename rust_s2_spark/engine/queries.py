@@ -26,6 +26,7 @@ from ..kernel.covering import RegionCoverer
 from ..kernel.region import Cap, Rect
 from . import specs, tiling
 from .join import cap_join, rect_join, covering_join
+from .memo import clear as clear_geo_cache, memo, release
 from .polyjoin import broadcast_memo_key, loop_join, loop_regions, session_broadcast
 from ..kernel import hierarchy as h
 
@@ -78,114 +79,39 @@ def _read(
     # move the full table to save nothing) or a pure map/filter (no shuffle
     # anywhere — the scan's own splits are the parallelism, and at
     # production split counts the spread guard is a no-op anyway).
+    #
+    # The plan object pins a file-listing snapshot, so a rewritten dataset
+    # dir is re-listed only after clear_geo_cache().
     key = (spread_key or _SPREAD_KEYS.get(name)) if spread else None
-    ckey = (spark.sparkContext.applicationId, sf_dir, name, key)
-    hit = _READ_CACHE.get(ckey)
-    if hit is not None:
-        return hit
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if key is not None:
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         n = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < n:
+        if key is not None and df.rdd.getNumPartitions() < n:
             df = df.repartition(n, F.col(key))
-    _READ_CACHE[ckey] = df
-    return df
+        return df
 
-
-_READ_CACHE: dict[tuple[str, str, str, str | None], DataFrame] = {}
-
-
-# Per-session memo of the tiled events table: the production design
-# materializes the ingest+tile stage ONCE (CheckpointManager / Iceberg
-# table) and every query reads it; persisting here is the in-session
-# analog — spatial queries stop re-deriving the encode per query, and the
-# InMemoryRelation boundary keeps Catalyst from re-planning through it.
-_GEO_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def clear_geo_cache() -> None:
-    """Unpersist + drop the memoized tiled-events tables (bench harness:
-    called after warmup so the first timed query pays the materialization
-    it would pay in production).  Also reclaims query-scoped persists
-    registered by the kNN cell-ring search and embed_dedup."""
-    for df in _GEO_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _GEO_CACHE.clear()
-    from .knn import clear_knn_cache
-
-    clear_knn_cache()
-    for df in _AUX_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _AUX_PERSISTS.clear()
-    for df in _AUX_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _AUX_CACHE.clear()
-    _EMBED_CACHE.clear()
-    _KNN_RESULT_CACHE.clear()
-    _DISTANCE_RESULT_CACHE.clear()
-    _COLOC_PAIRS_CACHE.clear()
-    _CLUSTER_RESULT_CACHE.clear()
-    _DBSCAN_RESULT_CACHE.clear()
-    _DBSCAN_WIDE_CACHE.clear()
-    _DEDUP_RESULT_CACHE.clear()
-    # plan-object memos (no persisted data, but they pin a file-listing
-    # snapshot — a rewritten dataset dir must be re-listed after a clear)
-    _READ_CACHE.clear()
-    # the clustered materialization is a COPY of the dataset's rows: after a
-    # clear it must be rebuilt from the (possibly rewritten) source, not
-    # served stale
-    _CLUSTERED_PATHS.clear()
-    # session broadcasts: same contract — the data-derived payloads
-    # (ivf_centroids) must come back from the rewritten source
-    from .polyjoin import clear_session_broadcasts
-
-    clear_session_broadcasts()
-
-
-# Query-scoped persisted intermediates (e.g. embed_dedup's homes table)
-# registered here so repeated invocations don't accumulate cached relations.
-_AUX_PERSISTS: list[DataFrame] = []
-
-# Keyed persisted intermediates: re-invocations REUSE the cached relation
-# instead of stacking a new persist per call (a long-lived session that
-# never runs the bench harness must not accumulate executor storage).
-_AUX_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _aux_persisted(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    df = _AUX_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _AUX_CACHE[key] = df
-    return df
+    return memo(spark, sf_dir, ("read", name, key), build)
 
 
 def events_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events + deterministic derived (lat, lng) + leaf cellid (persisted
-    once per session per scale factor — the materialized tiled table)."""
-    # applicationId (not id(spark)): a stopped-and-recreated session could
-    # reuse the same object address and hand back DataFrames bound to the
-    # dead context
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _GEO_CACHE.get(key)
-    if df is None:
+    once per session per scale factor — the materialized tiled table).
+
+    The production design materializes the ingest+tile stage ONCE
+    (CheckpointManager / Iceberg table) and every query reads it; the
+    session-memo persist is the in-session analog — spatial queries stop
+    re-deriving the encode per query, and the InMemoryRelation boundary
+    keeps Catalyst from re-planning through it."""
+
+    def build() -> DataFrame:
         lat_sql, lng_sql = specs.latlng_sql("event_id")
         df = _read(spark, sf_dir, "events").select(
             "event_id", F.expr(lat_sql).alias("lat"), F.expr(lng_sql).alias("lng")
         )
-        df = tiling.with_leaf_cellid(df).persist()
-        _GEO_CACHE[key] = df
-    return df
+        return tiling.with_leaf_cellid(df).persist()
+
+    return memo(spark, sf_dir, "events_geo", build)
 
 
 # ---------------------------------------------------------------------------
@@ -294,23 +220,19 @@ def q_cap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("region_id", "event_id")
 
 
-# Hilbert-clustered materializations of the tiled events table, one per
-# (session, dataset).  The in-session analog of maintaining the production
-# table as a cell_id-sorted Iceberg layout (engine/layout.py): written once,
-# then every range scan prunes at the parquet-footer level.
-_CLUSTERED_PATHS: dict[tuple[str, str], str] = {}
-
-
 def _clustered_events_path(spark: SparkSession, sf_dir: str) -> str:
+    """The Hilbert-clustered materialization of the tiled events table, one
+    per (session, dataset).  The in-session analog of maintaining the
+    production table as a cell_id-sorted Iceberg layout (engine/layout.py):
+    written once, then every range scan prunes at the parquet-footer level.
+    The path is a pure function of (applicationId, sf_dir), so a rebuild
+    after a clear overwrites the same directory."""
+    import hashlib
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _CLUSTERED_PATHS.get(key)
-    if path is None:
-        from .layout import write_clustered
+    from .layout import write_clustered
 
-        import hashlib
-
+    def build() -> str:
         base = os.environ.get("SPARK_GRAFT_TMP", "/tmp/spark_graft")
         # key the on-disk path by the FULL dataset dir (hash + basename for
         # readability): two datasets sharing a basename must not alias to —
@@ -318,7 +240,8 @@ def _clustered_events_path(spark: SparkSession, sf_dir: str) -> str:
         norm = os.path.normpath(sf_dir)
         sf_name = os.path.basename(norm)
         tag = hashlib.sha1(norm.encode()).hexdigest()[:10]
-        path = f"{base}/{key[0]}/clustered/{sf_name}-{tag}/events_geo"
+        app_id = spark.sparkContext.applicationId
+        path = f"{base}/{app_id}/clustered/{sf_name}-{tag}/events_geo"
         # 2k-row groups (schema is 4 fixed-width cols ≈ 32 B/row) so the
         # bench tables get enough groups for the covering ranges to skip
         # most of them.  At 10^12 rows the default 128 MB groups give the
@@ -331,8 +254,9 @@ def _clustered_events_path(spark: SparkSession, sf_dir: str) -> str:
             rows_per_group=2048,
             bytes_per_row_hint=32,
         )
-        _CLUSTERED_PATHS[key] = path
-    return path
+        return path
+
+    return memo(spark, sf_dir, "clustered_path", build)
 
 
 @functools.lru_cache(maxsize=None)
@@ -359,11 +283,12 @@ def _clustered_scan(spark: SparkSession, sf_dir: str, cov_rows) -> DataFrame:
     fragment (not ~60 chained Column ops -> py4j round trips); the scan
     plan object is memoized so re-invocations skip the parquet re-listing.
     """
-    ckey = ("clustered_scan", spark.sparkContext.applicationId, sf_dir, None)
-    docs = _READ_CACHE.get(ckey)
-    if docs is None:
-        docs = spark.read.parquet(_clustered_events_path(spark, sf_dir))
-        _READ_CACHE[ckey] = docs
+    docs = memo(
+        spark,
+        sf_dir,
+        "clustered_scan",
+        lambda: spark.read.parquet(_clustered_events_path(spark, sf_dir)),
+    )
     pred = F.expr(
         " OR ".join(
             f"cell_id BETWEEN {lo}L AND {hi}L"
@@ -990,7 +915,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four plan branches consume grams (sizes + both self-join sides);
     # without the persist each re-explodes the corpus.  Keyed cache:
     # re-invocations reuse instead of stacking persists.
-    grams = _aux_persisted(spark, sf_dir, "ngram_grams", _build_grams)
+    grams = memo(spark, sf_dir, "ngram_grams", lambda: _build_grams().persist())
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = grams.alias("a")
     b = grams.alias("b")
@@ -1052,7 +977,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return agg.select("doc_id", sim.alias("simhash"))
 
-    return _aux_persisted(spark, sf_dir, "simhash_sig", _build)
+    return memo(spark, sf_dir, "simhash_sig", lambda: _build().persist())
 
 
 def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1180,7 +1105,7 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature table computed once and persisted: it feeds the band join and
     # both sides of the estimate join (at 100 TB this is the checkpoint
     # table); keyed cache so repeated invocations reuse, never accumulate
-    sig = _aux_persisted(spark, sf_dir, "minhash_sig", _build_sig)
+    sig = memo(spark, sf_dir, "minhash_sig", lambda: _build_sig().persist())
     band_structs = ", ".join(
         "struct({b} AS band_idx, md5(concat_ws('_', {cols})) AS bk)".format(
             b=bnd,
@@ -1365,7 +1290,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # persisted once per (session, dataset): the bucketed-signature table is
     # the LSH index — the probe joins read it, they never re-hash the corpus
-    bkt = _aux_persisted(spark, sf_dir, "ann_lsh_bkt", _build_bkt)
+    bkt = memo(spark, sf_dir, "ann_lsh_bkt", lambda: _build_bkt().persist())
     # multiprobe: the query side explodes into the exact bucket + the B
     # hamming-1 neighbor buckets (flip one sign bit at a time)
     probe_arr = F.array(
@@ -1733,7 +1658,7 @@ def q_doc_keyterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cannot deduplicate them and the corpus would be scanned + exploded
     # once per consumer (the doc_bigrams mechanism).  tf is
     # distinct-terms-per-doc-bounded — well below the token stream.
-    tf = _aux_persisted(spark, sf_dir, "keyterms_tf", build_tf)
+    tf = memo(spark, sf_dir, "keyterms_tf", lambda: build_tf().persist())
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
     # no broadcast hint on df_tbl: the vocab scales with the corpus (AQE
     # broadcasts it while it is small, falls back to shuffle join at scale)
@@ -1805,7 +1730,7 @@ def q_doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("c"))
         )
 
-    cnt = _aux_persisted(spark, sf_dir, "bigram_counts", build)
+    cnt = memo(spark, sf_dir, "bigram_counts", lambda: build().persist())
     uni = cnt.where(F.col("w2").isNull()).select(
         F.col("w1").alias("w"), F.col("c").alias("cu")
     )
@@ -2023,12 +1948,13 @@ def _embed_setup(spark: SparkSession, sf_dir: str, tau: float, k: int | None = N
     the output is exactly the cos >= tau set at every K (proven by
     tests/test_embed_dedup_k.py running K=16 and K=64 on the same corpus).
     """
-    import math
+    return memo(
+        spark, sf_dir, ("embed_setup", tau, k), lambda: _embed_train(spark, sf_dir, tau, k)
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir, tau, k)
-    hit = _EMBED_CACHE.get(key)
-    if hit is not None:
-        return hit
+
+def _embed_train(spark: SparkSession, sf_dir: str, tau: float, k: int | None):
+    import math
 
     emb = _read(spark, sf_dir, "embeddings")
     K = _embed_k(emb.count(), k)
@@ -2062,9 +1988,6 @@ def _embed_setup(spark: SparkSession, sf_dir: str, tau: float, k: int | None = N
         .select("vec_id", "embedding", F.col("h.bucket").alias("bucket"), F.col("h.hd").alias("hd"))
         .persist()
     )
-    # registered for reclamation: repeated invocations must not accumulate
-    # cached relations (clear_geo_cache unpersists these)
-    _AUX_PERSISTS.append(homes)
     # per-bucket radii: K rows to the driver (like centroid training)
     radii = {int(r["bucket"]): float(r["mr"]) for r in homes.groupBy("bucket").agg(F.max("hd").alias("mr")).collect()}
     cd = np.sqrt(np.maximum(2.0 - 2.0 * (cents @ cents.T), 0.0))
@@ -2083,11 +2006,7 @@ def _embed_setup(spark: SparkSession, sf_dir: str, tau: float, k: int | None = N
     pairs_long = spark.createDataFrame(
         pair_rows, "bucket int, pair_id int, ba int, bb int"
     )
-    _EMBED_CACHE[key] = (homes, pairs_long)
-    return homes, pairs_long
-
-
-_EMBED_CACHE: dict[tuple[str, str, float, int | None], tuple[DataFrame, DataFrame]] = {}
+    return homes, pairs_long, bc
 
 
 def _block_sim_matrix(ma: np.ndarray, mb: np.ndarray, exact_fold: bool = True) -> np.ndarray:
@@ -2144,7 +2063,7 @@ def q_embed_dedup(
 
         blas = os.environ.get("SPARK_GRAFT_EMBED_BLAS", "0") == "1"
     exact_fold = not blas
-    homes, pairs_long = _embed_setup(spark, sf_dir, tau, k)
+    homes, pairs_long, _ = _embed_setup(spark, sf_dir, tau, k)
     rep = homes.join(F.broadcast(pairs_long), on="bucket")
 
     def _block_sims(key, pdf):
@@ -2210,19 +2129,16 @@ def q_knn_cellring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .knn import knn_cellring
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KNN_RESULT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = events_geo(spark, sf_dir)
-    qs = []
-    for qid, lat, lng in specs.KNN_QUERIES:
-        la, ln = math.radians(lat), math.radians(lng)
-        qs.append((qid, math.cos(la) * math.cos(ln), math.cos(la) * math.sin(ln), math.sin(la)))
-    out = knn_cellring(spark, docs, qs, specs.KNN_K, id_col="event_id")
-    out = out.select("query_id", "event_id", "rank", F.round("d2", 6).alias("d2_r"))
-    _KNN_RESULT_CACHE[key] = out
-    return out
+    def build() -> DataFrame:
+        docs = events_geo(spark, sf_dir)
+        qs = []
+        for qid, lat, lng in specs.KNN_QUERIES:
+            la, ln = math.radians(lat), math.radians(lng)
+            qs.append((qid, math.cos(la) * math.cos(ln), math.cos(la) * math.sin(ln), math.sin(la)))
+        out = knn_cellring(spark, docs, qs, specs.KNN_K, id_col="event_id")
+        return out.select("query_id", "event_id", "rank", F.round("d2", 6).alias("d2_r"))
+
+    return memo(spark, sf_dir, "knn_cellring", build)
 
 
 def q_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2244,20 +2160,14 @@ def q_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     already shuffled)."""
     from .join import distance_self_join
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DISTANCE_RESULT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pts = events_geo(spark, sf_dir)
-    out = distance_self_join(
-        pts, specs.DISTANCE_JOIN_RADIUS, id_col="event_id"
-    ).persist()
-    _AUX_PERSISTS.append(out)
-    _DISTANCE_RESULT_CACHE[key] = out
-    return out
-
-
-_DISTANCE_RESULT_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return memo(
+        spark,
+        sf_dir,
+        "distance_join",
+        lambda: distance_self_join(
+            events_geo(spark, sf_dir), specs.DISTANCE_JOIN_RADIUS, id_col="event_id"
+        ).persist(),
+    )
 
 
 def q_spatial_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2272,29 +2182,23 @@ def q_spatial_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sf0.01 gate scale where component-size^2 row counts stay small.
 
     Memoized per (session, dataset): the iterative search runs once; the
-    labeled result is a persisted DataFrame."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLUSTER_RESULT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    memo holds the checkpointed labels with the result."""
     from .cluster import connected_components
 
-    edges = q_distance_join(spark, sf_dir).select("event_a", "event_b")
-    cc = connected_components(edges, src="event_a", dst="event_b")
-    _AUX_PERSISTS.append(cc)
-    # no broadcast hint: cluster count scales with the data (AQE may still
-    # choose a broadcast when the aggregate side is small)
-    sizes = cc.groupBy("cluster").agg(F.count("*").alias("cluster_size"))
-    out = cc.join(sizes, on="cluster").select(
-        F.col("node").alias("event_id"),
-        F.col("cluster").alias("cluster_id"),
-        "cluster_size",
-    )
-    _CLUSTER_RESULT_CACHE[key] = out
-    return out
+    def build() -> tuple[DataFrame, DataFrame]:
+        edges = q_distance_join(spark, sf_dir).select("event_a", "event_b")
+        cc = connected_components(edges, src="event_a", dst="event_b")
+        # no broadcast hint: cluster count scales with the data (AQE may still
+        # choose a broadcast when the aggregate side is small)
+        sizes = cc.groupBy("cluster").agg(F.count("*").alias("cluster_size"))
+        out = cc.join(sizes, on="cluster").select(
+            F.col("node").alias("event_id"),
+            F.col("cluster").alias("cluster_id"),
+            "cluster_size",
+        )
+        return out, cc
 
-
-_CLUSTER_RESULT_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return memo(spark, sf_dir, "spatial_cluster", build)[0]
 
 
 def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2326,17 +2230,21 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster costs the same shuffles as a thousand hamlets.
 
     Memoized per (session, dataset) like the distance join it builds on."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DBSCAN_RESULT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _dbscan(spark, sf_dir)[0]
+
+
+def _dbscan(spark: SparkSession, sf_dir: str) -> tuple:
+    """The memoized DBSCAN labels: (result, wide labels with lat/lng)."""
+    return memo(spark, sf_dir, "dbscan", lambda: _dbscan_build(spark, sf_dir))
+
+
+def _dbscan_build(spark: SparkSession, sf_dir: str) -> tuple:
     from .cluster import connected_components
 
     # persist the epsilon edges: sym / degrees / core-edge restriction /
     # border assignment all consume them — unpersisted, every one of those
     # materializations would re-run the full distance join
     edges = q_distance_join(spark, sf_dir).select("event_a", "event_b").persist()
-    _AUX_PERSISTS.append(edges)
     sym = edges.select(
         F.col("event_a").alias("node"), F.col("event_b").alias("nbr")
     ).unionByName(
@@ -2348,7 +2256,6 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node")
         .persist()
     )
-    _AUX_PERSISTS.append(core)
     core_edges = edges.join(
         core.select(F.col("node").alias("event_a")), on="event_a"
     ).join(core.select(F.col("node").alias("event_b")), on="event_b")
@@ -2365,7 +2272,6 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    _AUX_PERSISTS.append(core_lbl)
     border = (
         sym.join(
             core_lbl.select(
@@ -2407,14 +2313,10 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint dir for fault tolerance.
         .localCheckpoint(eager=True)
     )
-    out = wide.select("event_id", "role", "cluster_id")
-    _DBSCAN_RESULT_CACHE[key] = out
-    _DBSCAN_WIDE_CACHE[key] = wide
-    return out
-
-
-_DBSCAN_RESULT_CACHE: dict[tuple[str, str], DataFrame] = {}
-_DBSCAN_WIDE_CACHE: dict[tuple[str, str], DataFrame] = {}
+    # the eager checkpoint cut the labels' lineage: nothing reads the
+    # intermediates any more (dependents first, as in memo.clear)
+    release((core_lbl, cc, core, edges))
+    return wide.select("event_id", "role", "cluster_id"), wide
 
 
 def q_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2434,10 +2336,7 @@ def q_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     all), with map-side partial min/max/count — a continent-sized cluster
     reduces to one row per map task before the exchange, so no cluster is
     a straggler."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DBSCAN_WIDE_CACHE:
-        q_dbscan(spark, sf_dir)
-    lab = _DBSCAN_WIDE_CACHE[key].where(F.col("cluster_id") >= 0)
+    lab = _dbscan(spark, sf_dir)[1].where(F.col("cluster_id") >= 0)
     return (
         lab.groupBy("cluster_id")
         .agg(
@@ -2488,7 +2387,7 @@ def _grid_counts(spark: SparkSession, sf_dir: str, lvl: int) -> DataFrame:
             decode, schema="tile long, face long, ti long, tj long, n long"
         )
 
-    return _aux_persisted(spark, sf_dir, f"grid_counts_l{lvl}", _counts)
+    return memo(spark, sf_dir, f"grid_counts_l{lvl}", lambda: _counts().persist())
 
 
 def q_cell_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2620,10 +2519,16 @@ def q_cell_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("level", "face", "ti_l", "tj_l")
         .agg(F.count("*").alias("n_tiles"), F.sum("n").alias("n_events"))
     )
-    comp = anc.where(
-        F.expr(f"n_tiles = shiftleft(CAST(1 AS BIGINT), 2 * ({lvl} - level))")
-    ).persist()
-    _AUX_PERSISTS.append(comp)
+    # keyed like the other persisted intermediates: a re-invocation builds
+    # the same plan, so it reuses the one cached relation
+    comp = memo(
+        spark,
+        sf_dir,
+        "cell_compact_tiles",
+        lambda: anc.where(
+            F.expr(f"n_tiles = shiftleft(CAST(1 AS BIGINT), 2 * ({lvl} - level))")
+        ).persist(),
+    )
     parents = comp.select(
         (F.col("level") + 1).alias("level"),
         F.col("face").alias("pf"),
@@ -2729,10 +2634,10 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (session, dataset) with the result persisted, like the
     other component queries: the label table is the pipeline's checkpoint
     artifact — the iterative search must run once, not once per consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DEDUP_RESULT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return memo(spark, sf_dir, "dedup_cluster", lambda: _dedup_build(spark, sf_dir))[0]
+
+
+def _dedup_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     from .cluster import connected_components
 
     pairs = q_minhash_lsh(spark, sf_dir).where(
@@ -2762,15 +2667,7 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    _AUX_PERSISTS.append(out)
-    _DEDUP_RESULT_CACHE[key] = out
-    return out
-
-
-_DEDUP_RESULT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-_KNN_RESULT_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return out, cc
 
 
 def q_cap_tile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2799,7 +2696,7 @@ def _focal_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return tiling.focal_counts(counts)
 
-    return _aux_persisted(spark, sf_dir, "focal_table", build)
+    return memo(spark, sf_dir, "focal_table", lambda: build().persist())
 
 
 def q_focal_density(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3277,12 +3174,14 @@ def q_colocation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset) like the other pair tables."""
     from .join import distance_self_join
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _COLOC_PAIRS_CACHE.get(key)
-    if pairs is None:
-        pts = events_geo(spark, sf_dir)
-        pairs = distance_self_join(pts, specs.COLOC_RADIUS, id_col="event_id")
-        _COLOC_PAIRS_CACHE[key] = pairs
+    pairs = memo(
+        spark,
+        sf_dir,
+        "coloc_pairs",
+        lambda: distance_self_join(
+            events_geo(spark, sf_dir), specs.COLOC_RADIUS, id_col="event_id"
+        ),
+    )
     # timestampdiff handles the parquet TIMESTAMP_NTZ type (unix_micros
     # does not); the delta is an exact int64 either way
     ev = _read(spark, sf_dir, "events", spread=False).select(
@@ -3312,9 +3211,6 @@ def q_colocation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             dt.alias("dt_us"),
         )
     )
-
-
-_COLOC_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3602,7 +3498,7 @@ def q_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage to build the broadcast, so without the persist the Arrow
     # contrib stage + groupBy would run once per consumer (grid-bounded
     # table — the persist is tiny at any corpus size)
-    tbl = _aux_persisted(spark, sf_dir, "moran_tbl", build_tbl)
+    tbl = memo(spark, sf_dir, "moran_tbl", lambda: build_tbl().persist())
     # ONE global aggregate: den/num expand algebraically over per-tile
     # sums —
     #   den = sum (N*x - S)^2            = N*(N*sum(x^2) - S^2)
@@ -4295,14 +4191,16 @@ def q_line_crossings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_crossing_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geofence crossings WITH the intersection coordinates: for every
     properly-crossing (step, segment) pair, the point where the two great
-    circles meet — rust-s2's edgeutil get_intersection
-    (edgeutil.rs:228-269) exported as a relational operator ("WHERE did
-    the user cross the border, not just whether").
+    circles meet — rust-s2's edge_crossings.rs::intersection exported as a
+    relational operator ("WHERE did the user cross the border, not just
+    whether").
 
     The point is (a x b) x (c x d) normalized, sign-oriented toward the
-    step's midpoint chord (a+b) — for a proper crossing the intersection
-    lies strictly inside both arcs, so the orientation dot product is
-    bounded away from zero.  ab is trig-derived (1-4 ulp engine noise),
+    step's midpoint chord (a+b).  The engine deliberately uses this naive
+    cross-product chain rather than the reference's stable/exact
+    escalation (oriented against a0+a1+b0+b1): for a proper crossing the
+    intersection lies strictly inside both arcs, so the orientation dot
+    product is bounded away from zero.  ab is trig-derived (1-4 ulp engine noise),
     cd is an exact inlined literal; the whole chain is mirrored op-for-op
     and the 6-dp rounded lat/lng absorbs the ~1e-15 tail exactly like
     s2_waypoints' interpolated coordinates.  atan2-based latitude so
@@ -4321,11 +4219,14 @@ def _intersection_latlng_cols(
     a: tuple[Column, Column, Column],
     b: tuple[Column, Column, Column],
 ) -> tuple[Column, Column]:
-    """get_intersection emission (edgeutil.rs:228-269) shared by
+    """Intersection emission (edge_crossings.rs::intersection) shared by
     s2_crossing_points and s2_self_intersect: r = (ab x cd) sign-oriented
     toward the arc midpoint chord (a + b), normalized, 6-dp atan2 lat/lng
-    (atan2 latitude so ulp-scale |z| > 1 can never NaN).  ONE op tree for
-    both queries so their op-mirroring oracles cannot silently diverge."""
+    (atan2 latitude so ulp-scale |z| > 1 can never NaN).  Deliberately the
+    naive (a x b) x (c x d) chain, not the reference's stable/exact
+    escalation: proper crossings rounded to 6 dp do not need it.  ONE op
+    tree for both queries so their op-mirroring oracles cannot silently
+    diverge."""
     abx, aby, abz = ab
     cdx, cdy, cdz = cd
     ax_, ay_, az_ = a
@@ -4417,8 +4318,9 @@ def q_self_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trajectory self-intersection detection: every pair of non-adjacent
     steps of the SAME user whose great-circle segments properly cross,
     with the crossing coordinates — the EdgeCrosser predicate
-    (edgeutil.rs:96-113 simple_crossing) plus get_intersection
-    (edgeutil.rs:228-269) turned inward ("where does the user's own track
+    (edgeutil.rs:96-113 simple_crossing) plus the intersection point
+    (edge_crossings.rs::intersection, as the naive (a x b) x (c x d) chain
+    oriented to a+b) turned inward ("where does the user's own track
     loop over itself" — the GPS loop/backtrack signal trajectory cleaning
     and map-matching pipelines key on).
 
@@ -4476,7 +4378,7 @@ def q_self_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted once per session: the self-join's two sides otherwise each
     # rebuild the scan + window chain (ReuseExchange stops at the divergent
     # block projections — the doc_bigrams lesson)
-    base = _aux_persisted(spark, sf_dir, "self_intersect_base", _build_base)
+    base = memo(spark, sf_dir, "self_intersect_base", lambda: _build_base().persist())
     left = base.select(
         "user_id",
         F.col("event_id").alias("event_a"),
@@ -4664,7 +4566,7 @@ def q_traj_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ut.join(F.broadcast(hot), on="tile", how="left_anti")
 
-    ut = _aux_persisted(spark, sf_dir, "traj_tiles", _build)
+    ut = memo(spark, sf_dir, "traj_tiles", lambda: _build().persist())
     sizes = ut.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = ut.alias("a"), ut.alias("b")
     inter = (
@@ -4853,14 +4755,14 @@ def q_s2_vectorize_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature-table pattern): built once per (session, sf), reused by
     # re-invocations; clear_geo_cache() drops them so the bench cold pass
     # pays the full stitch honestly
-    mask = _aux_persisted(spark, sf_dir, "vdist_mask", build_mask)
-    rings = _aux_persisted(
+    mask = memo(spark, sf_dir, "vdist_mask", lambda: build_mask().persist())
+    rings = memo(
         spark,
         sf_dir,
         "vdist_rings",
         lambda: boundary_rings(
             spark, mask, lvl, blocks_level=specs.VECTORIZE_DIST_BLOCKS
-        ),
+        ).persist(),
     )
     scale = F.lit(specs.VECTORIZE_DIST_SCALE)
 

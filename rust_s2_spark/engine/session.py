@@ -56,7 +56,11 @@ def get_spark(
         # shuffle buffers) never grow the heap mid-job — dynamic heap growth
         # funnels through the same host mmap_lock that serializes the python
         # workers.  ParallelGC beats G1 here: small heaps, throughput-bound
-        # batch stages, no latency targets.
+        # batch stages, no latency targets.  These flags apply only to
+        # separate executor JVMs (local-cluster via SPARK_GRAFT_MASTER, as in
+        # tools/bench_scaling.py, or a real cluster).  Under the default
+        # local[*] master the executors run inside the driver JVM, so they
+        # never take effect there and the driver runs the JVM default (G1).
         .config(
             "spark.executor.extraJavaOptions",
             "-XX:+AlwaysPreTouch -XX:+UseParallelGC",

@@ -73,25 +73,6 @@ def leaf_cellid_udf():
     return _UDF_CACHE["leaf"]
 
 
-def leaf_cellid_xyz_udf():
-    """(x, y, z) unit vector -> leaf CellID as i64 (cellid.rs:862-869
-    from_point path) — the encode entry for DERIVED points (step midpoints,
-    interpolations) that never existed as a lat/lng row."""
-    if "leaf_xyz" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _leaf_xyz(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
-            cid = hilbert.cellid_from_xyz(
-                x.to_numpy(np.float64),
-                y.to_numpy(np.float64),
-                z.to_numpy(np.float64),
-            )
-            return pd.Series(cid.view(np.int64))
-
-        _UDF_CACHE["leaf_xyz"] = _leaf_xyz
-    return _UDF_CACHE["leaf_xyz"]
-
-
 def cellid_to_latlng_udf():
     """CellID i64 -> cell-center (lat, lng) degrees."""
     if "center" not in _UDF_CACHE:
