@@ -927,9 +927,10 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    # no broadcast hint: sizes is O(docs); AQE picks the join from runtime stats
     j = (
-        inter.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
         .withColumn(
             "jaccard",
             F.col("inter").cast("double")
@@ -4580,7 +4581,8 @@ def q_traj_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("user_id").alias("user_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("user_id").alias("user_b"), F.col("n").alias("nb"))
-    j = inter.join(F.broadcast(sa), "user_a").join(F.broadcast(sb), "user_b")
+    # no broadcast hint: sizes is O(users); AQE picks the join from runtime stats
+    j = inter.join(sa, "user_a").join(sb, "user_b")
     # Ratios as EXACT integer half-up division, not round(double, 6):
     # engine round() semantics diverge on halfway decimal reprs (Spark
     # rounds the shortest decimal repr HALF_UP, DuckDB rounds the binary
@@ -4850,6 +4852,39 @@ def q_polyline_buffer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 QUERIES = {
+    "s2_moran": q_moran,
+    "s2_ripley_k": q_ripley_k,
+    "s2_tile_diversity": q_tile_diversity,
+    "s2_idw_smooth": q_idw_smooth,
+    "s2_decay_density": q_decay_density,
+    "s2_polyline_buffer_join": q_polyline_buffer_join,
+    "dedup_exact": q_dedup_exact,
+    "text_stats": q_text_stats,
+    "lang_id": q_lang_id,
+    "fingerprint": q_fingerprint,
+    "ngram_jaccard": q_ngram_jaccard,
+    "simhash": q_simhash,
+    "simhash_dedup": q_simhash_dedup,
+    "simhash_banded": q_simhash_banded,
+    "minhash_lsh": q_minhash_lsh,
+    "ann_cosine": q_ann_cosine,
+    "ann_ivf": q_ann_ivf,
+    "ann_lsh": q_ann_lsh,
+    "embed_dedup": q_embed_dedup,
+    "span_pipeline": q_span_pipeline,
+    "geo_extract": q_geo_extract,
+    "media_features": q_media_features,
+    "pricing_summary": q_pricing_summary,
+    "revenue_by_nation": q_revenue_by_nation,
+    "top_orders": q_top_orders,
+    "events_hourly": q_events_hourly,
+    "sessionize": q_sessionize,
+    "events_cube": q_events_cube,
+    "asof_join": q_asof_join,
+    "token_count": q_token_count,
+    "doc_keyterms": q_doc_keyterms,
+    "doc_bigrams": q_doc_bigrams,
+    "sample_hash": q_sample_hash,
     "s2_tile_assign": q_tile_assign,
     "s2_cell_hierarchy": q_cell_hierarchy,
     "s2_cap_join": q_cap_join,
@@ -4900,37 +4935,4 @@ QUERIES = {
     "s2_stay_points": q_stay_points,
     "s2_tile_churn": q_tile_churn,
     "s2_hotspot": q_hotspot,
-    "s2_moran": q_moran,
-    "s2_ripley_k": q_ripley_k,
-    "s2_tile_diversity": q_tile_diversity,
-    "s2_idw_smooth": q_idw_smooth,
-    "s2_decay_density": q_decay_density,
-    "s2_polyline_buffer_join": q_polyline_buffer_join,
-    "dedup_exact": q_dedup_exact,
-    "text_stats": q_text_stats,
-    "lang_id": q_lang_id,
-    "fingerprint": q_fingerprint,
-    "ngram_jaccard": q_ngram_jaccard,
-    "simhash": q_simhash,
-    "simhash_dedup": q_simhash_dedup,
-    "simhash_banded": q_simhash_banded,
-    "minhash_lsh": q_minhash_lsh,
-    "ann_cosine": q_ann_cosine,
-    "ann_ivf": q_ann_ivf,
-    "ann_lsh": q_ann_lsh,
-    "embed_dedup": q_embed_dedup,
-    "span_pipeline": q_span_pipeline,
-    "geo_extract": q_geo_extract,
-    "media_features": q_media_features,
-    "pricing_summary": q_pricing_summary,
-    "revenue_by_nation": q_revenue_by_nation,
-    "top_orders": q_top_orders,
-    "events_hourly": q_events_hourly,
-    "sessionize": q_sessionize,
-    "events_cube": q_events_cube,
-    "asof_join": q_asof_join,
-    "token_count": q_token_count,
-    "doc_keyterms": q_doc_keyterms,
-    "doc_bigrams": q_doc_bigrams,
-    "sample_hash": q_sample_hash,
 }

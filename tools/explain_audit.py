@@ -1,4 +1,4 @@
-"""Plan-shape audit: dump formatted physical plans for the headline queries.
+"""Plan-shape audit: dump formatted physical plans for every registered query.
 
 Writes PLANS.md with each query's `.explain("formatted")` output plus an
 automated checklist: broadcast joins where expected, no cartesian products,
@@ -15,74 +15,6 @@ import re
 import sys
 
 sys.path.insert(0, ".")
-
-AUDIT = [
-    "s2_tile_assign",
-    "s2_cap_join",
-    "s2_cap_join_clustered",
-    "s2_rect_join",
-    "s2_pip_join",
-    "s2_poly_nested_join",
-    "s2_poly_overlay_join",
-    "s2_coastline_join",
-    "s2_distance_join",
-    "s2_spatial_cluster",
-    "s2_dbscan",
-    "s2_cluster_stats",
-    "s2_cell_disk",
-    "s2_cell_compact",
-    "s2_tile_pyramid",
-    "dedup_cluster",
-    "s2_focal_density",
-    "s2_geo_sample",
-    "s2_trajectory_step",
-    "s2_trajectory_stats",
-    "s2_colocation_join",
-    "s2_od_matrix",
-    "s2_bearing",
-    "doc_quality",
-    "geo_training_features",
-    "s2_rasterize",
-    "s2_vectorize_dist",
-    "s2_knn",
-    "s2_segment_distance",
-    "s2_snap_join",
-    "s2_voronoi_assign",
-    "s2_step_midpoint",
-    "s2_speed_filter",
-    "s2_waypoints",
-    "s2_traj_simplify",
-    "s2_traj_jaccard",
-    "s2_line_crossings",
-    "doc_keyterms",
-    "s2_tile_churn",
-    "s2_hotspot",
-    "s2_polyline_buffer_join",
-    "s2_cap_tile_rollup",
-    "dedup_exact",
-    "ngram_jaccard",
-    "minhash_lsh",
-    "simhash_dedup",
-    "ann_cosine",
-    "embed_dedup",
-    "pricing_summary",
-    "sessionize",
-    "asof_join",
-    "token_count",
-    "sample_hash",
-    "events_cube",
-    "ann_lsh",
-    "simhash_banded",
-    "s2_moran",
-    "s2_ripley_k",
-    "s2_crossing_points",
-    "s2_self_intersect",
-    "s2_stay_points",
-    "s2_tile_diversity",
-    "s2_idw_smooth",
-    "s2_decay_density",
-    "doc_bigrams",
-]
 
 # Intentional BNL joins, with the reason printed into the audit.  Any other
 # BNL/cartesian join is a scale bug and fails the audit loudly.
@@ -173,18 +105,17 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     out = io.StringIO()
-    out.write("# PLANS — physical-plan audit of headline queries\n\n")
+    out.write("# PLANS — physical-plan audit of every registered query\n\n")
     out.write(
         "Generated by `tools/explain_audit.py`. Checklist per query: broadcast\n"
-        "joins for small sides, no *unexpected* cartesian/BNL joins (the two\n"
-        "exact-top-k baselines s2_knn and ann_cosine intentionally broadcast-\n"
-        "cross a <=8-row query side — whitelisted below), geometry in single\n"
-        "Arrow stages, everything else whole-stage codegen.\n\n"
+        "joins for small sides, no *unexpected* cartesian/BNL joins (the\n"
+        f"{len(INTENTIONAL_BNL)} queries in `INTENTIONAL_BNL` broadcast-cross a single-row\n"
+        "aggregate or a <=8-row query side; each note below states the bound),\n"
+        "geometry in single Arrow stages, everything else whole-stage codegen.\n\n"
     )
     all_ok = True
-    for name in AUDIT:
-        df = QUERIES[name](spark, sf_dir)
-        plan = plan_of(df)
+    for name, fn in QUERIES.items():
+        plan = plan_of(fn(spark, sf_dir))
         out.write(f"## {name}\n\n")
         notes, ok = audit(plan, name)
         all_ok &= ok
@@ -197,7 +128,7 @@ def main():
         out.write("\n```\n\n")
     with open("PLANS.md", "w") as f:
         f.write(out.getvalue())
-    print("wrote PLANS.md")
+    print(f"wrote PLANS.md ({len(QUERIES)} queries)")
     if not all_ok:
         print("AUDIT FAILED: unexpected BNL/cartesian join — see PLANS.md")
         sys.exit(1)
