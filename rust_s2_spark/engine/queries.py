@@ -2176,9 +2176,11 @@ def q_spatial_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     epsilon graph (DBSCAN with eps = DISTANCE_JOIN_RADIUS, minPts = 2 — every
     edge endpoint is core).  Each clustered event gets its component's
     minimum event_id as cluster_id, plus the cluster size.  Edges reuse the
-    memoized s2_distance_join pairs; components come from the iterative
-    hash-min + pointer-jumping loop (engine/cluster.py, O(log diameter)
-    rounds of two equi-shuffles each).  The oracle recomputes the fixpoint
+    memoized s2_distance_join pairs; components come from
+    engine/cluster.py: a partition-local numpy union-find, one aggregation
+    per node, and the hash-min + pointer-jumping loop only over the boundary
+    edges between partitions (no round at all when the graph fits one
+    partition).  The oracle recomputes the fixpoint
     as recursive-CTE reachability (min reachable id per node) — feasible at
     the sf0.01 gate scale where component-size^2 row counts stay small.
 
@@ -2225,8 +2227,9 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrees are ONE groupBy keyed by event_id; the core filter and the
     core-core edge restriction are equi-joins on event_id (no broadcast
     hint — the core set scales with the data; AQE broadcasts it while it
-    is small); components come from the contracting hash-min loop
-    (engine/cluster.py).  Every step shuffles only on event_id — no driver
+    is small); components come from engine/cluster.py (partition-local
+    union-find, then the contracting hash-min loop on the boundary graph
+    only).  Every join and aggregation is keyed on event_id — no driver
     data motion, nothing keyed by cluster size, so one continent-sized
     cluster costs the same shuffles as a thousand hamlets.
 
@@ -2628,7 +2631,8 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     is then just ``doc_id = canonical_id``.
 
     Plan shape: the pair table is the (already skew-capped) LSH output —
-    tiny relative to the corpus; the component loop contracts geometrically
+    tiny relative to the corpus; components come from a partition-local
+    union-find plus a fixpoint over the boundary edges only
     (engine/cluster.py); the final labeling is ONE left join of the corpus
     against the labels on doc_id.  No stage is keyed by cluster size.
 

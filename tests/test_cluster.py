@@ -1,14 +1,17 @@
 """Connected components (engine/cluster.py) vs an exact union-find oracle.
 
-The loop's two scaling claims are asserted directly: correctness (min id per
-component, any topology) and round count (pointer jumping contracts a path
-graph in O(log n) rounds where plain hash-min needs O(n))."""
+The scheme's scaling claims are asserted directly: correctness (min id per
+component, any topology, any partitioning), round count (pointer jumping
+contracts a path graph in O(log n) rounds where plain hash-min needs O(n))
+and a Spark-jobs budget (a small graph is one partition: no round runs)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 
-from rust_s2_spark.engine.cluster import connected_components
+from rust_s2_spark.engine.cluster import _local_union_find, connected_components
 
 
 def _union_find(n_edges):
@@ -41,6 +44,83 @@ def _run(spark, edges, **kw):
     return {r.node: r.cluster for r in got.collect()}
 
 
+def _random_edges(rng, n=150):
+    m = int(rng.randint(40, 200))
+    edges = set()
+    while len(edges) < m:
+        a, b = rng.randint(1, n + 1, 2)
+        if a != b:
+            edges.add((int(min(a, b)), int(max(a, b))))
+    return sorted(edges)
+
+
+@contextlib.contextmanager
+def _many_partitions(spark):
+    """A tiny AQE advisory size: the rebalance before the local union-find
+    keeps many partitions, so the boundary graph is not empty."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64b")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_local_union_find_matches_union_find():
+    """The partition-local numpy union-find alone, no Spark: any edge list
+    (self-loops, repeats, descending chains) maps every node to its
+    component minimum."""
+    rng = np.random.RandomState(11)
+    cases = [
+        [(i + 1, i) for i in range(1, 60)],
+        [(5, 5), (5, 3), (3, 5), (9, 2)],
+    ]
+    for _ in range(40):
+        n = int(rng.randint(2, 120))
+        m = int(rng.randint(1, 160))
+        cases.append([(int(a), int(b)) for a, b in rng.randint(1, n + 1, (m, 2))])
+    for edges in cases:
+        u = np.array([a for a, _ in edges], np.int64)
+        v = np.array([b for _, b in edges], np.int64)
+        nodes, roots = _local_union_find(u, v)
+        assert list(nodes) == sorted(set(u) | set(v))
+        assert dict(zip(nodes.tolist(), roots.tolist())) == _union_find(edges)
+
+
+def test_small_graph_jobs_budget(spark):
+    """A ~100-edge graph fits one partition: the checkpointed local
+    union-find and the certificate are all that run (no aggregation, no
+    boundary round).  A change that adds eager actions fails this ceiling."""
+    edges = _random_edges(np.random.RandomState(3), n=300)
+    df = spark.createDataFrame(edges, "src long, dst long")
+    sc = spark.sparkContext
+    group = "test_cluster_jobs_budget"
+    stats = {}
+    sc.setJobGroup(group, group)
+    try:
+        got = connected_components(df, stats=stats)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 10, jobs
+    assert stats["rounds"] == 0, stats
+    assert {r.node: r.cluster for r in got.collect()} == _union_find(edges)
+
+
+def test_boundary_phase_on_many_partitions(spark):
+    """The path graph and the random graphs again, spread over many
+    partitions: local components are cut at partition borders, the boundary
+    fixpoint must run (rounds > 0) and still finish well under 20 rounds."""
+    path = [(i, i + 1) for i in range(1, 120)]
+    rng = np.random.RandomState(7)
+    with _many_partitions(spark):
+        for edges in [path] + [_random_edges(rng) for _ in range(2)]:
+            stats = {}
+            assert _run(spark, edges, stats=stats) == _union_find(edges)
+            assert 0 < stats["rounds"] <= 20, stats
+
+
 def test_two_components_and_isolated_edge(spark):
     edges = [(1, 2), (2, 3), (10, 11), (3, 1)]
     assert _run(spark, edges) == _union_find(edges)
@@ -48,7 +128,9 @@ def test_two_components_and_isolated_edge(spark):
 
 def test_path_graph_logarithmic_rounds(spark):
     """A 120-node path: plain hash-min needs ~120 rounds; hash-min with
-    pointer jumping must finish in well under 20."""
+    pointer jumping must finish in well under 20 (in one partition the
+    local union-find alone labels it and no round runs; the many-partition
+    run is test_boundary_phase_on_many_partitions)."""
     edges = [(i, i + 1) for i in range(1, 120)]
     stats = {}
     got = _run(spark, edges, stats=stats)
@@ -60,14 +142,7 @@ def test_path_graph_logarithmic_rounds(spark):
 def test_random_graphs_match_union_find(spark):
     rng = np.random.RandomState(7)
     for trial in range(3):
-        n = 150
-        m = int(rng.randint(40, 200))
-        edges = set()
-        while len(edges) < m:
-            a, b = rng.randint(1, n + 1, 2)
-            if a != b:
-                edges.add((int(min(a, b)), int(max(a, b))))
-        edges = sorted(edges)
+        edges = _random_edges(rng)
         assert _run(spark, edges) == _union_find(edges)
 
 

@@ -20,7 +20,8 @@ with the classic offline checker:
    min core-neighbor cluster, noise = -1 — compared exactly against
    q_dbscan for all 1M events.
 
-Writes CORRECTNESS_sf1_cluster.json.  Usage:
+Writes CORRECTNESS_<dataset>_cluster_<utc>.json, a new file every run (an
+earlier record is never overwritten).  Usage:
 
     python tools/sf1_cluster_gate.py [sf1_dir]
 """
@@ -83,10 +84,9 @@ def _components(ea: np.ndarray, eb: np.ndarray) -> dict[int, int]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft/sf1"
-    global _OUT, _DATASET
     label = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    _OUT = f"CORRECTNESS_{label}_cluster.json"
-    _DATASET = sf_dir
+    stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
+    out_path = f"CORRECTNESS_{label}_cluster_{stamp}.json"
     from rust_s2_spark.engine import specs
     from rust_s2_spark.engine.queries import QUERIES, clear_geo_cache
     from rust_s2_spark.engine.session import get_spark
@@ -120,7 +120,7 @@ def main() -> int:
     print(f"{'PASS' if pairs_ok else 'FAIL'} s2_distance_join: rows={len(sp)} "
           f"(spark {t_spark:.1f}s, duckdb {t_duck:.1f}s)")
     if not pairs_ok:
-        _write(results)
+        _write(out_path, sf_dir, results)
         return 1
 
     ea = sp["event_a"].to_numpy(np.int64)
@@ -272,17 +272,15 @@ def main() -> int:
           f"(spark {t_spark:.1f}s, reference {t_ref:.1f}s)")
 
     clear_geo_cache()
-    _write(results)
+    _write(out_path, sf_dir, results)
     n_fail = sum(1 for r in results.values() if r["status"] != "pass")
     print(f"{len(results) - n_fail} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
 
-_OUT = "CORRECTNESS_sf1_cluster.json"
-_DATASET = "/tmp/spark_graft/sf1"
-
-
-def _write(results: dict) -> None:
+def _write(path: str, dataset: str, results: dict) -> None:
+    """Write the record to a new file; opened exclusively, so an earlier
+    record of the same name is never overwritten."""
     record = {
         "what": (
             "scale gate for the epsilon-graph trio (distance join, connected "
@@ -296,10 +294,10 @@ def _write(results: dict) -> None:
             "per-cluster aggregates, all compared EXACTLY (ids, 7-dp chord2, "
             "roles, cluster ids, sizes, bit-exact bbox doubles)"
         ),
-        "dataset": _DATASET,
+        "dataset": dataset,
         "results": results,
     }
-    with open(_OUT, "w") as f:
+    with open(path, "x") as f:
         json.dump(record, f, indent=1)
 
 
