@@ -31,6 +31,7 @@ from pyspark.sql.functions import pandas_udf
 from ..kernel import hierarchy as h
 from ..kernel.covering import RegionCoverer
 from ..kernel.region import Cap, Rect
+from ..kernel.stuv import latlng_to_xyz
 from ..kernel.constants import MAX_LEVEL
 from . import tiling
 
@@ -223,10 +224,7 @@ def _cap_refine_udf():
         lat: pd.Series, lng: pd.Series, cx: pd.Series, cy: pd.Series, cz: pd.Series, r2: pd.Series
     ) -> pd.Series:
         # cap.rs:212-214: |c-p|^2 <= radius2 — one fused numpy expression.
-        la = np.radians(lat.to_numpy(np.float64))
-        ln = np.radians(lng.to_numpy(np.float64))
-        cl = np.cos(la)
-        px, py, pz = cl * np.cos(ln), cl * np.sin(ln), np.sin(la)
+        px, py, pz = latlng_to_xyz(lat, lng)
         d2 = (
             (px - cx.to_numpy(np.float64)) ** 2
             + (py - cy.to_numpy(np.float64)) ** 2

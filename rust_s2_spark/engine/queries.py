@@ -24,10 +24,11 @@ from pyspark.sql import functions as F
 
 from ..kernel.covering import RegionCoverer
 from ..kernel.region import Cap, Rect
+from ..kernel.stuv import latlng_to_xyz
 from . import specs, tiling
 from .join import cap_join, rect_join, covering_join
 from .memo import clear as clear_geo_cache, memo, release
-from .polyjoin import broadcast_memo_key, loop_join, loop_regions, session_broadcast
+from .polyjoin import _pip_refine_udf, region_refine_udf, session_broadcast
 from ..kernel import hierarchy as h
 
 # ---------------------------------------------------------------------------
@@ -345,24 +346,28 @@ def _rect_cov_rows() -> tuple:
     return tuple(cov_rows)
 
 
-def polygon_edge_crosses() -> dict[str, list[tuple[float, float, float]]]:
-    """Per-polygon edge-plane normals cross(v_k, v_{k+1}) as exact literals."""
-    out = {}
-    for rid, ring in specs.POLYGONS:
+def _ring_crosses(rings) -> list[tuple[float, float, float]]:
+    """Edge-plane normals cross(v_k, v_{k+1}) of every spec ring in turn,
+    as exact literals."""
+    out = []
+    for ring in rings:
         verts = specs.polygon_vertices_xyz(ring)
-        crosses = []
         n = len(verts)
         for k in range(n):
             a, b = verts[k], verts[(k + 1) % n]
-            crosses.append(
+            out.append(
                 (
                     a[1] * b[2] - a[2] * b[1],
                     a[2] * b[0] - a[0] * b[2],
                     a[0] * b[1] - a[1] * b[0],
                 )
             )
-        out[rid] = crosses
     return out
+
+
+def polygon_edge_crosses() -> dict[str, list[tuple[float, float, float]]]:
+    """Per-polygon edge-plane normals cross(v_k, v_{k+1}) as exact literals."""
+    return {rid: _ring_crosses([ring]) for rid, ring in specs.POLYGONS}
 
 
 _PX_SQL = "(cos(radians(lat)) * cos(radians(lng)))"
@@ -426,8 +431,6 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     levels = sorted({r[2] for r in cov_rows})
     coarse = covering_join(docs, coverings, id_col="event_id", levels=levels)
     coarse = coarse.where(_margin_pred())
-    from .polyjoin import _pip_refine_udf
-
     refined = coarse.where(
         _pip_refine_udf(spark, verts, tag="loops")(
             F.col("region_id"), F.col("lat"), F.col("lng")
@@ -453,24 +456,6 @@ def _nested_setup():
     return poly, cov
 
 
-def _nested_edge_crosses() -> list[tuple[float, float, float]]:
-    """Edge-plane normals of every ring of the nested polygon, as literals."""
-    out = []
-    for ring in specs.NESTED_RINGS:
-        verts = specs.polygon_vertices_xyz(ring)
-        n = len(verts)
-        for k in range(n):
-            a, b = verts[k], verts[(k + 1) % n]
-            out.append(
-                (
-                    a[1] * b[2] - a[2] * b[1],
-                    a[2] * b[0] - a[0] * b[2],
-                    a[0] * b[1] - a[1] * b[0],
-                )
-            )
-    return out
-
-
 def q_poly_nested_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIP join against a 4-deep nested polygon (country > lake > island >
     pond): covering prefilter over the whole hierarchy, JVM margin
@@ -478,21 +463,13 @@ def q_poly_nested_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes containment independently as XOR of per-ring
     convex edge-sign tests."""
     docs = events_geo(spark, sf_dir)
-    _, cov_rows = _nested_setup()
+    poly, cov_rows = _nested_setup()
     coverings = spark.createDataFrame(list(cov_rows), _COVER_SCHEMA)
     levels = sorted({r[2] for r in cov_rows})
     coarse = covering_join(docs, coverings, id_col="event_id", levels=levels)
-    ok = F.expr(_margin_sql(_nested_edge_crosses()))
-    coarse = coarse.where(ok)
-    from .polyjoin import nested_polygon_refine_udf
-
-    rings = [
-        np.asarray(specs.polygon_vertices_xyz(r), dtype=np.float64)
-        for r in specs.NESTED_RINGS
-    ]
-    refined = coarse.where(
-        nested_polygon_refine_udf(spark, rings, tag="nested")(F.col("lat"), F.col("lng"))
-    )
+    coarse = coarse.where(F.expr(_margin_sql(_ring_crosses(specs.NESTED_RINGS))))
+    refine = region_refine_udf(spark, "nested", lambda: {specs.NESTED_POLYGON_ID: poly})
+    refined = coarse.where(refine(F.col("region_id"), F.col("lat"), F.col("lng")))
     return refined.select("region_id", "event_id")
 
 
@@ -504,17 +481,16 @@ def q_region_area_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes counts by edge-sign tests and the area/centroid
     by evaluating the same triangle-fan formulas in DuckDB SQL from the
     vertex literals."""
-    import math as _math
-
-    from ..kernel.pip import Loop, Polygon
+    from ..kernel.pip import Loop
 
     docs = events_geo(spark, sf_dir)
     verts, cov_rows = _loop_setup()
-    _, ncov = _nested_setup()
+    npoly, ncov = _nested_setup()
+    regions = {rid: Loop(v) for rid, v in verts.items()}
+    regions[specs.NESTED_POLYGON_ID] = npoly
     # ONE covering join + ONE Arrow refine over the union of all regions
-    # (loops + nested polygon) — previously two of each; both the margin
-    # CASE and the refine dispatch per region_id, so per-region semantics
-    # (and hence the oracle rows) are unchanged.
+    # (loops + nested polygon); both the margin CASE and the refine dispatch
+    # per region_id, so per-region semantics match the single-kind joins.
     all_cov = list(cov_rows) + list(ncov)
     coverings = spark.createDataFrame(all_cov, _COVER_SCHEMA)
     levels = sorted({r[2] for r in all_cov})
@@ -523,38 +499,21 @@ def q_region_area_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"WHEN '{rid}' THEN ({_margin_sql(crosses)})"
         for rid, crosses in polygon_edge_crosses().items()
     )
-    narm = f"WHEN '{specs.NESTED_POLYGON_ID}' THEN ({_margin_sql(_nested_edge_crosses())})"
+    nested_ok = _margin_sql(_ring_crosses(specs.NESTED_RINGS))
+    narm = f"WHEN '{specs.NESTED_POLYGON_ID}' THEN ({nested_ok})"
     coarse = coarse.where(F.expr(f"CASE region_id {arms} {narm} ELSE false END"))
-    from .polyjoin import mixed_region_refine_udf
-
-    rings = [
-        np.asarray(specs.polygon_vertices_xyz(r), dtype=np.float64)
-        for r in specs.NESTED_RINGS
-    ]
     hits = coarse.where(
-        mixed_region_refine_udf(
-            spark, verts, {specs.NESTED_POLYGON_ID: rings}, tag="areastats"
-        )(F.col("region_id"), F.col("lat"), F.col("lng"))
+        region_refine_udf(spark, "areastats", lambda: regions)(
+            F.col("region_id"), F.col("lat"), F.col("lng")
+        )
     ).select("region_id", "event_id")
     counts = hits.groupBy("region_id").agg(F.count("*").alias("n_events"))
 
     # region geometry stats via the kernel (driver-side: regions are few)
     geo_rows = []
-    for rid, ring in specs.POLYGONS:
-        lp = Loop(np.asarray(specs.polygon_vertices_xyz(ring), dtype=np.float64))
-        area = lp.area()
-        c = lp.centroid()
-        geo_rows.append((rid, area, float(c[0]), float(c[1]), float(c[2])))
-    npoly = Polygon.from_loops(
-        [
-            Loop(np.asarray(specs.polygon_vertices_xyz(r), dtype=np.float64))
-            for r in specs.NESTED_RINGS
-        ]
-    )
-    nc = npoly.centroid()
-    geo_rows.append(
-        (specs.NESTED_POLYGON_ID, npoly.area(), float(nc[0]), float(nc[1]), float(nc[2]))
-    )
+    for rid, region in regions.items():
+        c = region.centroid()
+        geo_rows.append((rid, region.area(), float(c[0]), float(c[1]), float(c[2])))
     geo = spark.createDataFrame(
         geo_rows, "region_id string, area double, cx double, cy double, cz double"
     )
@@ -589,31 +548,6 @@ def _overlay_setup():
     return polys, tuple(cov_rows)
 
 
-def _overlay_edge_crosses() -> list[tuple[float, float, float]]:
-    out = []
-    for ring in (specs.OVERLAY_A, specs.OVERLAY_B):
-        verts = specs.polygon_vertices_xyz(ring)
-        n = len(verts)
-        for k in range(n):
-            p, q = verts[k], verts[(k + 1) % n]
-            out.append(
-                (
-                    p[1] * q[2] - p[2] * q[1],
-                    p[2] * q[0] - p[0] * q[2],
-                    p[0] * q[1] - p[1] * q[0],
-                )
-            )
-    return out
-
-
-# Per-executor memo of rebuilt overlay polygons (key: broadcast_memo_key).
-_OVERLAY_UDF_CACHE: dict[tuple, dict] = {}
-
-
-# Per-executor memo for the coastline refine (Loop precompute + crosses).
-_LOOP_UDF_CACHE: dict[tuple, object] = {}
-
-
 @functools.cache
 def _coastline_setup():
     from ..kernel.pip import Loop
@@ -634,6 +568,8 @@ def q_coastline_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-sign oracle valid."""
     from pyspark.sql.functions import pandas_udf
 
+    from ..kernel.pip import Loop
+
     docs = events_geo(spark, sf_dir)
     verts, cov_rows = _coastline_setup()
     coverings = spark.createDataFrame(list(cov_rows), _COVER_SCHEMA)
@@ -644,28 +580,18 @@ def q_coastline_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of plan build + codegen per query, while the same |cross(v_k,v_k+1).p|
     # tests are a single 512x3 @ 3xm numpy matmul over the (tiny,
     # covering-pruned) candidate batch.  3-term dot order matches the
-    # oracle's SQL exactly.
+    # oracle's SQL exactly.  A fresh Loop ships: the covering's per-face
+    # edge index would triple the payload and the refine never reads it.
     bc = session_broadcast(
         spark,
         "coastline_refine",
-        lambda: (verts.copy(), np.cross(verts, np.roll(verts, -1, axis=0))),
+        lambda: (Loop(verts), np.cross(verts, np.roll(verts, -1, axis=0))),
     )
-    key = broadcast_memo_key(spark, bc)
 
     @pandas_udf("boolean")
     def _inside(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        from ..kernel.pip import Loop
-
-        cache = _LOOP_UDF_CACHE.get(key)
-        if cache is None:
-            v, cr = bc.value
-            cache = (Loop(v), cr)
-            _LOOP_UDF_CACHE[key] = cache
-        lp, cr = cache
-        la = np.radians(lat.to_numpy(np.float64))
-        ln = np.radians(lng.to_numpy(np.float64))
-        cl = np.cos(la)
-        p = np.stack([cl * np.cos(ln), cl * np.sin(ln), np.sin(la)])
+        lp, cr = bc.value
+        p = np.stack(latlng_to_xyz(lat, lng))
         dets = cr @ p  # (n_edges, m)
         ok = (np.abs(dets) > specs.PIP_MARGIN).all(axis=0)
         ok &= lp.contains_points(p[0], p[1], p[2])
@@ -682,53 +608,15 @@ def q_poly_overlay_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle never sees the overlay: it recomputes membership as the
     boolean algebra of the two operands' convex edge-sign tests, so a wrong
     overlay boundary flips rows and fails the hash."""
-    from pyspark.sql.functions import pandas_udf
-
     docs = events_geo(spark, sf_dir)
     polys, cov_rows = _overlay_setup()
     coverings = spark.createDataFrame(list(cov_rows), _COVER_SCHEMA)
     levels = sorted({r[2] for r in cov_rows})
     coarse = covering_join(docs, coverings, id_col="event_id", levels=levels)
-    ok = F.expr(_margin_sql(_overlay_edge_crosses()))
+    ok = F.expr(_margin_sql(_ring_crosses((specs.OVERLAY_A, specs.OVERLAY_B))))
     coarse = coarse.where(ok)
-
-    # ship the overlay polygons' loop vertex arrays + depths; rebuild once
-    # per executor (Polygon precompute memoized); built inside make() so a
-    # warm cache hit skips the copies entirely
-    bc = session_broadcast(
-        spark,
-        "overlay_refine",
-        lambda: {
-            rid: [(lp.vertices.copy(), lp.depth) for lp in p.loops]
-            for rid, p in polys.items()
-        },
-    )
-    key = broadcast_memo_key(spark, bc)
-
-    @pandas_udf("boolean")
-    def _inside(region_id: pd.Series, lat: pd.Series, lng: pd.Series) -> pd.Series:
-        from ..kernel.pip import Loop, Polygon
-
-        cache = _OVERLAY_UDF_CACHE.setdefault(key, {})
-        la = np.radians(lat.to_numpy(np.float64))
-        ln = np.radians(lng.to_numpy(np.float64))
-        cl = np.cos(la)
-        x, y, z = cl * np.cos(ln), cl * np.sin(ln), np.sin(la)
-        out = np.zeros(len(lat), dtype=bool)
-        rids = region_id.to_numpy()
-        for rid in pd.unique(rids):
-            if rid not in cache:
-                loops = []
-                for verts, depth in bc.value[rid]:
-                    lp = Loop(verts)
-                    lp.depth = depth
-                    loops.append(lp)
-                cache[rid] = Polygon(loops, _nested=True)
-            m = rids == rid
-            out[m] = cache[rid].contains_points(x[m], y[m], z[m])
-        return pd.Series(out)
-
-    refined = coarse.where(_inside(F.col("region_id"), F.col("lat"), F.col("lng")))
+    refine = region_refine_udf(spark, "overlay", lambda: polys)
+    refined = coarse.where(refine(F.col("region_id"), F.col("lat"), F.col("lng")))
     return refined.select("region_id", "event_id")
 
 
@@ -1789,6 +1677,16 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _polyline_segs_broadcast(spark: SparkSession):
+    """The shared polyline's segment endpoints ``[(a, b)]`` as xyz arrays,
+    broadcast once per session."""
+    return session_broadcast(
+        spark,
+        "polyline_segs",
+        lambda: [(np.asarray(a), np.asarray(b)) for a, b in specs.polyline_segments_xyz()],
+    )
+
+
 def q_segment_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min distance from each event to a polyline (edgeutil kernel in-engine).
 
@@ -1800,18 +1698,11 @@ def q_segment_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..kernel import edgeutil as eu
 
-    bc = session_broadcast(
-        spark,
-        "polyline_segs",
-        lambda: [(np.asarray(a), np.asarray(b)) for a, b in specs.polyline_segments_xyz()],
-    )
+    bc = _polyline_segs_broadcast(spark)
 
     @pandas_udf("double")
     def _dist(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        la = np.radians(lat.to_numpy(np.float64))
-        ln = np.radians(lng.to_numpy(np.float64))
-        cl = np.cos(la)
-        xs = np.stack([cl * np.cos(ln), cl * np.sin(ln), np.sin(la)], axis=1)
+        xs = np.stack(latlng_to_xyz(lat, lng), axis=1)
         best = None
         for a, b in bc.value:
             d = eu.chord2_point_to_edge(xs, a, b)
@@ -1839,18 +1730,11 @@ def q_snap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..kernel import edgeutil as eu
 
-    bc = session_broadcast(
-        spark,
-        "polyline_segs",
-        lambda: [(np.asarray(a), np.asarray(b)) for a, b in specs.polyline_segments_xyz()],
-    )
+    bc = _polyline_segs_broadcast(spark)
 
     @pandas_udf("struct<seg: long, dist: double>")
     def _snap(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
-        la = np.radians(lat.to_numpy(np.float64))
-        ln = np.radians(lng.to_numpy(np.float64))
-        cl = np.cos(la)
-        xs = np.stack([cl * np.cos(ln), cl * np.sin(ln), np.sin(la)], axis=1)
+        xs = np.stack(latlng_to_xyz(lat, lng), axis=1)
         ds = np.stack([eu.chord2_point_to_edge(xs, a, b) for a, b in bc.value], axis=0)
         seg = np.argmin(ds, axis=0)
         best = ds[seg, np.arange(ds.shape[1])]
@@ -2010,34 +1894,21 @@ def _embed_train(spark: SparkSession, sf_dir: str, tau: float, k: int | None):
     return homes, pairs_long, bc
 
 
-def _block_sim_matrix(ma: np.ndarray, mb: np.ndarray, exact_fold: bool = True) -> np.ndarray:
-    """Block cosine-similarity matrix, two interchangeable kernels.
-
-    exact_fold=True (default): dimension-order accumulation — entry-wise
-    bit-identical to the oracle's sequential fold, ~d passes over the block.
-    exact_fold=False: ONE BLAS matmul + einsum norms — ~d-fold fewer memory
-    passes, within ~1e-15 of the fold (different summation order only).
-    The fold stays default because the correctness gate hashes exact
-    doubles; flip to BLAS if the gate ever moves to a tolerance
-    (equivalence pinned by tests/test_embed_dedup_k.py)."""
-    if exact_fold:
-        acc = np.zeros((len(ma), len(mb)))
-        na = np.zeros(len(ma))
-        nb = np.zeros(len(mb))
-        for d in range(ma.shape[1]):
-            acc += np.outer(ma[:, d], mb[:, d])
-            na += ma[:, d] * ma[:, d]
-            nb += mb[:, d] * mb[:, d]
-    else:
-        acc = ma @ mb.T
-        na = np.einsum("ij,ij->i", ma, ma)
-        nb = np.einsum("ij,ij->i", mb, mb)
+def _block_sim_matrix(ma: np.ndarray, mb: np.ndarray) -> np.ndarray:
+    """Block cosine-similarity matrix by dimension-order accumulation:
+    entry-wise bit-identical to the oracle's sequential fold (a BLAS
+    matmul would sum in another order, and the gate hashes exact doubles)."""
+    acc = np.zeros((len(ma), len(mb)))
+    na = np.zeros(len(ma))
+    nb = np.zeros(len(mb))
+    for d in range(ma.shape[1]):
+        acc += np.outer(ma[:, d], mb[:, d])
+        na += ma[:, d] * ma[:, d]
+        nb += mb[:, d] * mb[:, d]
     return acc / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
 
 
-def q_embed_dedup(
-    spark: SparkSession, sf_dir: str, k: int | None = None, blas: bool | None = None
-) -> DataFrame:
+def q_embed_dedup(spark: SparkSession, sf_dir: str, k: int | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — EXACT block-pair join.
 
     Scale design (no crossJoin, no per-pair Python):
@@ -2059,11 +1930,6 @@ def q_embed_dedup(
     degree), never O(n^2).
     """
     tau = float(specs.EMBED_DEDUP_TAU)
-    if blas is None:
-        import os
-
-        blas = os.environ.get("SPARK_GRAFT_EMBED_BLAS", "0") == "1"
-    exact_fold = not blas
     homes, pairs_long, _ = _embed_setup(spark, sf_dir, tau, k)
     rep = homes.join(F.broadcast(pairs_long), on="bucket")
 
@@ -2080,7 +1946,7 @@ def q_embed_dedup(
             return pd.DataFrame({"id_a": [], "id_b": [], "sim": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "sim": "float64"}
             )
-        sim = _block_sim_matrix(ma, mb, exact_fold=exact_fold)
+        sim = _block_sim_matrix(ma, mb)
         ia, ib = np.nonzero(sim >= tau)
         id_a, id_b = ids_a[ia], ids_b[ib]
         lo = np.minimum(id_a, id_b)
@@ -4828,20 +4694,13 @@ def q_polyline_buffer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a point can fall in several segments' coverings -> dedupe before refine
     cand = cand.select("event_id", "lat", "lng").dropDuplicates(["event_id"])
 
-    bc = session_broadcast(
-        spark,
-        "polyline_segs",
-        lambda: [(np.asarray(a), np.asarray(b)) for a, b in specs.polyline_segments_xyz()],
-    )
+    bc = _polyline_segs_broadcast(spark)
     s = math.sin(0.5 * math.radians(specs.POLYLINE_BUFFER_DEG))
     thresh = 4.0 * s * s
 
     @pandas_udf("boolean")
     def _within(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        la = np.radians(lat.to_numpy(np.float64))
-        ln = np.radians(lng.to_numpy(np.float64))
-        cl = np.cos(la)
-        xs = np.stack([cl * np.cos(ln), cl * np.sin(ln), np.sin(la)], axis=1)
+        xs = np.stack(latlng_to_xyz(lat, lng), axis=1)
         best = None
         for a, b in bc.value:
             d = eu.chord2_point_to_edge(xs, a, b)

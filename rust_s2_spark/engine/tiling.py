@@ -1,8 +1,10 @@
-"""Tile assignment: leaf CellID pandas UDF + hierarchy as Spark Column bit math.
+"""Tile assignment: leaf CellID encode + hierarchy, all as Spark Column math.
 
-The only Python in the hot path is the Hilbert encode UDF (8 vectorized table
-lookups per batch, Arrow-ferried). Everything downstream — parent truncation,
-range endpoints, level, validity — is pure Spark SQL bit arithmetic
+The leaf encode is pure Column math (trig, face/uv/st projection, then the
+8-round 4-bit Hilbert walk, cellid.rs:135-154), so no row is sent to Python
+to be tiled; the one Arrow stage here is ``focal_counts``' neighbour explode
+over a grid-bounded count table. Everything downstream — parent truncation,
+range endpoints, level, validity — is Spark SQL bit arithmetic
 (cellid.rs:265-268, 442-449 semantics), so Catalyst codegens it and can
 partition/prune on tile columns with no Python round-trip.
 
@@ -15,6 +17,8 @@ negative, faces 0-3 positive; a range is always within one face).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -25,8 +29,6 @@ from ..kernel import hilbert
 from ..kernel.constants import MAX_LEVEL, NUM_FACES, POS_BITS
 
 __all__ = [
-    "leaf_cellid_udf",
-    "cellid_to_latlng_udf",
     "cellid_to_token_udf",
     "with_leaf_cellid",
     "parent_col",
@@ -38,10 +40,6 @@ __all__ = [
     "face_col",
 ]
 
-
-# pandas UDFs are built lazily (decorating at import time requires an active
-# SparkSession for DDL-type parsing); factories are memoized per process.
-_UDF_CACHE: dict[str, object] = {}
 
 # Canonical 4-bit Hilbert LOOKUP_POS (1024 entries) packed big-endian
 # 2-bytes-per-entry into ONE BinaryType literal.  Why binary, not array: a
@@ -58,45 +56,18 @@ _LOOKUP_POS_BYTES = bytes(
 )
 
 
-def leaf_cellid_udf():
-    """(lat_deg, lng_deg) -> leaf CellID as i64 (bit-pattern of the u64 id)."""
-    if "leaf" not in _UDF_CACHE:
-
-        @pandas_udf("long")
-        def _leaf(lat: pd.Series, lng: pd.Series) -> pd.Series:
-            cid = hilbert.cellid_from_latlng(
-                lat.to_numpy(np.float64), lng.to_numpy(np.float64)
-            )
-            return pd.Series(cid.view(np.int64))
-
-        _UDF_CACHE["leaf"] = _leaf
-    return _UDF_CACHE["leaf"]
-
-
-def cellid_to_latlng_udf():
-    """CellID i64 -> cell-center (lat, lng) degrees."""
-    if "center" not in _UDF_CACHE:
-
-        @pandas_udf("struct<lat:double, lng:double>")
-        def _center(cid: pd.Series) -> pd.DataFrame:
-            lat, lng = hilbert.cellid_to_latlng(cid.to_numpy(np.int64).view(np.uint64))
-            return pd.DataFrame({"lat": lat, "lng": lng})
-
-        _UDF_CACHE["center"] = _center
-    return _UDF_CACHE["center"]
-
-
+@functools.cache
 def cellid_to_token_udf():
-    """CellID i64 -> canonical hex token (debug/interchange, not hot path)."""
-    if "token" not in _UDF_CACHE:
-        from ..kernel.hierarchy import to_token
+    """CellID i64 -> canonical hex token (debug/interchange, not hot path).
+    Built on first use (decorating at import time needs an active
+    SparkSession to parse the return type), once per process."""
+    from ..kernel.hierarchy import to_token
 
-        @pandas_udf("string")
-        def _token(cid: pd.Series) -> pd.Series:
-            return cid.map(lambda v: to_token(np.int64(v).view(np.uint64)))
+    @pandas_udf("string")
+    def _token(cid: pd.Series) -> pd.Series:
+        return cid.map(lambda v: to_token(np.int64(v).view(np.uint64)))
 
-        _UDF_CACHE["token"] = _token
-    return _UDF_CACHE["token"]
+    return _token
 
 
 def with_leaf_cellid(
@@ -104,7 +75,6 @@ def with_leaf_cellid(
     lat_col: str = "lat",
     lng_col: str = "lng",
     out: str = "cell_id",
-    use_udf: bool = False,
 ) -> DataFrame:
     """(lat_deg, lng_deg) -> leaf CellID column, PURE Spark Column math.
 
@@ -129,11 +99,7 @@ def with_leaf_cellid(
       directly on an inlined encode took ~100 s of rewrite + interpreted
       fallback).  The value is exactly deterministic, so re-execution is
       safe; unused-column pruning still removes the encode entirely.
-
-    ``use_udf=True`` keeps the Arrow-UDF variant for A/B runs.
     """
-    if use_udf:
-        return df.withColumn(out, leaf_cellid_udf()(F.col(lat_col), F.col(lng_col)))
     lat, lng = F.col(lat_col), F.col(lng_col)
     P = "__s2_"  # temp-column prefix, dropped at the end
     lat_r, lng_r = F.radians(lat), F.radians(lng)

@@ -51,24 +51,3 @@ def test_corpus_smaller_than_k_floor(spark, tmp_path):
     )
     assert got == want
 
-
-def test_blas_path_equivalence(spark):
-    """The flagged one-matmul kernel matches the oracle-exact fold to
-    ~1e-15 on random blocks, and the end-to-end query emits identical
-    pairs at sf0.001 (sims well clear of the tau boundary)."""
-    import numpy as np
-
-    from rust_s2_spark.engine.queries import _block_sim_matrix, q_embed_dedup
-
-    rng = np.random.default_rng(3)
-    ma = rng.normal(size=(37, 16))
-    mb = rng.normal(size=(23, 16))
-    a = _block_sim_matrix(ma, mb, exact_fold=True)
-    b = _block_sim_matrix(ma, mb, exact_fold=False)
-    assert np.max(np.abs(a - b)) < 1e-12
-
-    fold = sorted(map(tuple, q_embed_dedup(spark, SF).collect()))
-    blas = sorted(map(tuple, q_embed_dedup(spark, SF, blas=True).collect()))
-    assert len(fold) > 0
-    assert [r[:2] for r in fold] == [r[:2] for r in blas]
-    assert all(abs(x[2] - y[2]) < 1e-9 for x, y in zip(fold, blas))

@@ -108,20 +108,18 @@ def test_span_invariant(spark):
 
 
 def test_column_encode_bitmatch_udf_on_fixture(spark):
-    """The pure-Column Hilbert encode (default path) must be bit-identical to
-    the Arrow-UDF/numpy kernel on the full sf0.001 events fixture."""
+    """The pure-Column Hilbert encode must be bit-identical to the numpy
+    kernel on the full sf0.001 events fixture."""
     from rust_s2_spark.engine.queries import events_geo
+    from rust_s2_spark.kernel import hilbert
 
     geo = events_geo(spark, "/root/testdata/sf0.001").drop("cell_id")
-    col_df = tiling.with_leaf_cellid(geo, out="c").select("event_id", "c").toPandas()
-    udf_df = (
-        tiling.with_leaf_cellid(geo, out="c", use_udf=True)
-        .select("event_id", "c")
-        .toPandas()
-    )
-    merged = col_df.merge(udf_df, on="event_id", suffixes=("_col", "_udf"))
-    assert len(merged) == len(col_df) == 1000
-    assert (merged["c_col"] == merged["c_udf"]).all()
+    got = tiling.with_leaf_cellid(geo, out="c").select("lat", "lng", "c").toPandas()
+    want = hilbert.cellid_from_latlng(
+        got["lat"].to_numpy(np.float64), got["lng"].to_numpy(np.float64)
+    ).view(np.int64)
+    assert len(got) == 1000
+    assert (got["c"].to_numpy() == want).all()
 
 
 def test_column_encode_deterministic_across_executions(spark):

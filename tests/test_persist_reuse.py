@@ -63,19 +63,22 @@ def test_session_broadcast_builds_once_per_tag(spark):
     assert b1 is b2  # same tag -> same Broadcast object, make() not re-run
     assert calls["n"] == 2  # once per distinct tag
     assert b3 is not b1
-    assert pj.broadcast_memo_key(spark, b1) == pj.broadcast_memo_key(spark, b2)
-    assert pj.broadcast_memo_key(spark, b3) != pj.broadcast_memo_key(spark, b1)
 
 
 def test_tagged_queries_reuse_broadcasts_across_warm_runs(spark):
-    Q.q_pip_join(spark, SF).count()
-    Q.q_poly_nested_join(spark, SF).count()
-    Q.q_coastline_join(spark, SF).count()
+    queries = (
+        Q.q_pip_join,
+        Q.q_poly_nested_join,
+        Q.q_coastline_join,
+        Q.q_poly_overlay_join,
+        Q.q_region_area_stats,
+    )
+    for q in queries:
+        q(spark, SF).count()
     base = _n_broadcasts()
     for _ in range(2):
-        Q.q_pip_join(spark, SF).count()
-        Q.q_poly_nested_join(spark, SF).count()
-        Q.q_coastline_join(spark, SF).count()
+        for q in queries:
+            q(spark, SF).count()
     # warm re-runs ship nothing new: the broadcast memo is stable
     assert _n_broadcasts() == base
 
@@ -98,3 +101,41 @@ def test_cc_queries_release_checkpoints_on_clear(spark):
         assert ids() - base
         Q.clear_geo_cache()
         assert not ids() - base
+
+
+def test_untagged_refine_is_held_until_clear(spark):
+    """An untagged refine (the benchmark replays one batch through its
+    ``.func``) gets its own broadcast of the built loops, which the memo
+    holds so a clear frees it; the UDF answers as the loops themselves."""
+    import numpy as np
+    import pandas as pd
+
+    from rust_s2_spark.engine import polyjoin as pj
+    from rust_s2_spark.engine import specs
+    from rust_s2_spark.kernel.pip import Loop
+    from rust_s2_spark.kernel.stuv import latlng_to_xyz
+
+    verts, _ = Q._loop_setup()
+    Q.clear_geo_cache()
+    udf = pj._pip_refine_udf(spark, verts)
+    assert _n_broadcasts() == 1
+
+    rng = np.random.default_rng(5)
+    rids, lat, lng = [], [], []
+    for rid, ring in specs.POLYGONS:
+        c_lat, c_lng = np.mean(ring, axis=0)
+        rids += [rid] * 500
+        lat.append(c_lat + rng.uniform(-15, 15, 500))
+        lng.append(c_lng + rng.uniform(-20, 20, 500))
+    rids, lat, lng = np.array(rids), np.concatenate(lat), np.concatenate(lng)
+    got = udf.func(pd.Series(rids), pd.Series(lat), pd.Series(lng)).to_numpy()
+    px, py, pz = latlng_to_xyz(lat, lng)
+    want = np.zeros(len(rids), dtype=bool)
+    for rid, v in verts.items():
+        m = rids == rid
+        want[m] = Loop(v).contains_points(px[m], py[m], pz[m])
+    assert want.any() and not want.all()
+    assert (got == want).all()
+
+    Q.clear_geo_cache()
+    assert _n_broadcasts() == 0

@@ -242,3 +242,50 @@ def test_angle_contains_vertex_tiling_partition():
             angle_contains_vertex(spokes[(i + 1) % k], b, spokes[i]) for i in range(k)
         ]
         assert sum(owners) == 1, (k, phase, owners)
+
+
+def test_shipped_regions_answer_identically_after_pickle():
+    """The polygon queries broadcast the Loop/Polygon objects their setups
+    build.  Every one, pickled after a first query (so lazily built caches
+    travel too), answers contains_points bit-identically, and so does the
+    object rebuilt from its vertices and depths alone."""
+    import pickle
+
+    from rust_s2_spark.engine import queries as Q
+    from rust_s2_spark.kernel.stuv import latlng_to_xyz
+
+    verts, _ = Q._loop_setup()
+    regions = {rid: Loop(v) for rid, v in verts.items()}
+    regions["nested"] = Q._nested_setup()[0]
+    regions.update(Q._overlay_setup()[0])
+    regions["coastline"] = Loop(Q._coastline_setup()[0])
+
+    def rebuilt(region):
+        if isinstance(region, Loop):
+            return Loop(region.vertices.copy())
+        loops = []
+        for lp in region.loops:
+            fresh = Loop(lp.vertices.copy())
+            fresh.depth = lp.depth
+            loops.append(fresh)
+        return Polygon(loops, _nested=True)
+
+    rng = np.random.default_rng(11)
+    glob = latlng_to_xyz(
+        np.degrees(np.arcsin(rng.uniform(-1, 1, 3000))), rng.uniform(-180, 180, 3000)
+    )
+    for rid, region in regions.items():
+        ring_verts = (
+            region.vertices
+            if isinstance(region, Loop)
+            else np.concatenate([lp.vertices for lp in region.loops])
+        )
+        near = ring_verts[rng.integers(len(ring_verts), size=3000)]
+        near = near + rng.normal(scale=0.02, size=near.shape)
+        near /= np.linalg.norm(near, axis=1, keepdims=True)
+        px, py, pz = (np.concatenate([g, n]) for g, n in zip(glob, near.T))
+        want = region.contains_points(px, py, pz)
+        assert want.any() and not want.all(), rid
+        shipped = pickle.loads(pickle.dumps(region))
+        assert np.array_equal(shipped.contains_points(px, py, pz), want), rid
+        assert np.array_equal(rebuilt(region).contains_points(px, py, pz), want), rid
