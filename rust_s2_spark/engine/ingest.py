@@ -29,11 +29,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DOC_SCHEMA = (
-    "doc_id string, "
-    "spans array<struct<kind:string, text:string, media_ref:string, offset:int>>"
-)
-
 # The 14 exact latlng vectors (cellid.rs:1118-1134) are injected as docs 0-13
 # so bit-match against the reference is exercised end-to-end.
 _EXACT_VECTORS = [

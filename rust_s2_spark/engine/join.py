@@ -264,9 +264,7 @@ def cap_join(
     if jvm_refine:
         # same |c-p|^2 <= r2 predicate in pure Column math: stays inside
         # whole-stage codegen, no Arrow round-trip for the refine.
-        px = F.cos(F.radians("lat")) * F.cos(F.radians("lng"))
-        py = F.cos(F.radians("lat")) * F.sin(F.radians("lng"))
-        pz = F.sin(F.radians("lat"))
+        px, py, pz = tiling.xyz_cols("lat", "lng")
         d2 = (
             (px - F.col("cx")) ** 2 + (py - F.col("cy")) ** 2 + (pz - F.col("cz")) ** 2
         )
@@ -373,9 +371,7 @@ def distance_self_join(
     chord = 2.0 * math.sin(radius_rad / 2.0)
     r2 = chord * chord
 
-    px = F.cos(F.radians("lat")) * F.cos(F.radians("lng"))
-    py = F.cos(F.radians("lat")) * F.sin(F.radians("lng"))
-    pz = F.sin(F.radians("lat"))
+    px, py, pz = tiling.xyz_cols("lat", "lng")
     base = pts.select(
         F.col(id_col).alias("_id"),
         tiling.parent_col(cell_col, lvl).alias("_cell"),

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from ..kernel import hierarchy as h
 from ..kernel.covering import RegionCoverer
 from ..kernel.region import Cap
+from . import tiling
 from .join import covering_join
 from .memo import hold
 
@@ -122,9 +123,7 @@ def knn_cellring(
     we_persisted = not (lvl.useMemory or lvl.useDisk)
     if we_persisted:
         proj = hold(spark, proj.persist())
-    px = F.cos(F.radians("lat")) * F.cos(F.radians("lng"))
-    py = F.cos(F.radians("lat")) * F.sin(F.radians("lng"))
-    pz = F.sin(F.radians("lat"))
+    px, py, pz = tiling.xyz_cols("lat", "lng")
 
     qvec = {qid: (cx, cy, cz) for qid, cx, cy, cz in queries}
     pending = [qid for qid, *_ in queries]

@@ -1771,7 +1771,8 @@ WHERE acb * bda > 0 AND acb * cbd > 0 AND acb * dac > 0
 
 
 def o_crossing_points() -> str:
-    """get_intersection replay: the o_line_crossings frame and predicate
+    """edge_crossings.rs::intersection replay (the naive cross-product
+    form the engine uses): the o_line_crossings frame and predicate
     verbatim, then the (ab x cd) cross product, midpoint-chord sign
     orientation, normalization, and atan2 lat/lng — every op mirrored in
     the Spark order, 6-dp rounded (the s2_waypoints precedent for
@@ -1863,8 +1864,9 @@ def o_self_intersect() -> str:
     candidate join, which is complete for gap <= W — and the three
     banded sign tests (> SELF_INTERSECT_EPS, identical literal: exact
     touches from the sf1 LCG lattice are true zeros computed as ~1e-17
-    noise, excluded deterministically) plus the get_intersection chain
-    with every product mirrored in the Spark op order.  Measured genuine
+    noise, excluded deterministically) plus the
+    edge_crossings.rs::intersection chain with every product mirrored in
+    the Spark op order.  Measured genuine
     margins: 8.2e-07 / 1.8e-10 / 1.4e-09 / 4.9e-12 at sf0.001/0.01/0.1/1
     vs the 1e-13 band and ~1e-15 product noise."""
     w_ = specs.SELF_INTERSECT_W

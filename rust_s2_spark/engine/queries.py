@@ -632,9 +632,7 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         la, ln = math.radians(lat), math.radians(lng)
         q_rows.append((qid, math.cos(la) * math.cos(ln), math.cos(la) * math.sin(ln), math.sin(la)))
     queries = spark.createDataFrame(q_rows, "query_id string, qx double, qy double, qz double")
-    px = F.cos(F.radians("lat")) * F.cos(F.radians("lng"))
-    py = F.cos(F.radians("lat")) * F.sin(F.radians("lng"))
-    pz = F.sin(F.radians("lat"))
+    px, py, pz = tiling.xyz_cols("lat", "lng")
     d2 = (px - F.col("qx")) ** 2 + (py - F.col("qy")) ** 2 + (pz - F.col("qz")) ** 2
     joined = docs.crossJoin(F.broadcast(queries)).withColumn("d2", d2)
     # single window: Catalyst's WindowGroupLimit (Spark >= 3.5; this repo
@@ -2225,37 +2223,17 @@ def q_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _grid_counts(spark: SparkSession, sf_dir: str, lvl: int) -> DataFrame:
     """Occupied level-``lvl`` tiles with event counts and decoded grid
-    coordinates (tile, face, ti, tj, n) — the shared, session-persisted
-    base table for the grid-space queries (cell disk, compaction).  One
-    groupBy over the tiled events + one Arrow decode of the DISTINCT tile
-    set (grid-bounded: ≤ 6·4^lvl rows at any corpus size)."""
-    sh = 30 - lvl
+    coordinates (tile, n, face, ti, tj) — the shared, session-persisted
+    base table for the grid-space queries (cell disk, compaction, pyramid,
+    IDW smoothing, and under _focal_table the focal family).  One groupBy
+    over the tiled events + one Arrow decode of the DISTINCT tile set
+    (grid-bounded: ≤ 6·4^lvl rows at any corpus size)."""
 
     def _counts():
-        docs = events_geo(spark, sf_dir)
-        raw = docs.groupBy(tiling.parent_col("cell_id", lvl).alias("tile")).agg(
-            F.count("*").alias("n")
-        )
-
-        def decode(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                t = pdf["tile"].to_numpy(np.int64)
-                face, i, j, _ = h.cellid_to_face_ij_orientation(t.view(np.uint64))
-                yield pd.DataFrame(
-                    {
-                        "tile": t,
-                        "face": face.astype(np.int64),
-                        "ti": (i >> sh).astype(np.int64),
-                        "tj": (j >> sh).astype(np.int64),
-                        "n": pdf["n"].to_numpy(np.int64),
-                    }
-                )
-
-        return raw.mapInPandas(
-            decode, schema="tile long, face long, ti long, tj long, n long"
-        )
+        raw = events_geo(spark, sf_dir).groupBy(
+            tiling.parent_col("cell_id", lvl).alias("tile")
+        ).agg(F.count("*").alias("n"))
+        return tiling.with_face_ij(raw, lvl)
 
     return memo(spark, sf_dir, f"grid_counts_l{lvl}", lambda: _counts().persist())
 
@@ -2275,7 +2253,6 @@ def q_cell_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded events table is touched exactly once, by the counts groupBy
     (cellid.rs:336-347 edge_neighbors supplies the step)."""
     lvl = specs.DISK_LEVEL
-    sh = 30 - lvl
     counts = _grid_counts(spark, sf_dir, lvl)
 
     w = Window.partitionBy("face").orderBy(
@@ -2318,15 +2295,13 @@ def q_cell_disk(spark: SparkSession, sf_dir: str) -> DataFrame:
                             frontier.append(x)
                 tiles = np.fromiter(seen.keys(), np.int64, len(seen))
                 rings = np.fromiter(seen.values(), np.int64, len(seen))
-                face, i, j, _ = h.cellid_to_face_ij_orientation(
-                    tiles.view(np.uint64)
-                )
+                face, ti, tj = tiling.tile_face_ij(tiles, lvl)
                 yield pd.DataFrame(
                     {
                         "seed_face": np.full(len(seen), sfc, dtype=np.int64),
-                        "face": face.astype(np.int64),
-                        "ti": (i >> sh).astype(np.int64),
-                        "tj": (j >> sh).astype(np.int64),
+                        "face": face,
+                        "ti": ti,
+                        "tj": tj,
                         "ring": rings,
                         "tile": tiles,
                     }
@@ -2553,21 +2528,21 @@ def q_cap_tile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _focal_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-session persisted (tile, n, focal_n) table at FOCAL_LEVEL —
-    the density feature table both q_focal_density and the training-feature
-    capstone consume.  GRID-BOUNDED (<= 6*4^L rows at any corpus size), so
-    the persist is tiny; the unbounded events table is scanned once per
-    session per SF."""
-
-    def build() -> DataFrame:
-        lvl = specs.FOCAL_LEVEL
-        ev = events_geo(spark, sf_dir)
-        counts = ev.groupBy(tiling.parent_col("cell_id", lvl).alias("tile")).agg(
-            F.count("*").alias("n")
-        )
-        return tiling.focal_counts(counts)
-
-    return memo(spark, sf_dir, "focal_table", lambda: build().persist())
+    """Per-session persisted (tile, n, face, ti, tj, focal_n) table at
+    FOCAL_LEVEL — the density feature table the focal family (focal
+    density, hotspot, Moran's I) and the training-feature capstone consume.
+    Built over the FOCAL_LEVEL _grid_counts table, which s2_idw_smooth
+    reads too, so the unbounded events table is aggregated at this level
+    once per session per SF.  GRID-BOUNDED (<= 6*4^L rows at any corpus
+    size), so the persist is tiny."""
+    return memo(
+        spark,
+        sf_dir,
+        "focal_table",
+        lambda: tiling.focal_counts(
+            _grid_counts(spark, sf_dir, specs.FOCAL_LEVEL)
+        ).persist(),
+    )
 
 
 def q_focal_density(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2586,34 +2561,11 @@ def q_focal_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow Arrow stage over the GRID-BOUNDED count table (<= 6*4^L rows at
     any input scale), so the focal groupBy and the final equi-join shuffle
     only grid-bounded data — the unbounded events table is touched exactly
-    once.  Output keys are grid coordinates (face, ti, tj): the
-    engine-independent key the oracle recomputes combinatorially via the
-    FACE_WRAP CASE tables (same machinery the vectorize oracles trust)."""
-    lvl = specs.FOCAL_LEVEL
-    out = _focal_table(spark, sf_dir)
-    sh = 30 - lvl
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            t = pdf["tile"].to_numpy(np.int64)
-            face, i, j, _ = h.cellid_to_face_ij_orientation(t.view(np.uint64))
-            yield pd.DataFrame(
-                {
-                    "face": face,
-                    "ti": i >> sh,
-                    "tj": j >> sh,
-                    "n": pdf["n"].to_numpy(np.int64),
-                    "focal_n": pdf["focal_n"].to_numpy(np.int64),
-                }
-            )
-
-    # all-bigint schema: the driver's hash compare wants type-identical
-    # columns on both engines (tests/test_driver_contract.py)
-    return out.mapInPandas(
-        decode, schema="face long, ti long, tj long, n long, focal_n long"
-    )
+    once.  Output keys are grid coordinates (face, ti, tj), decoded once
+    in the shared _grid_counts table: the engine-independent key the oracle
+    recomputes combinatorially via the FACE_WRAP CASE tables (same
+    machinery the vectorize oracles trust)."""
+    return _focal_table(spark, sf_dir).select("face", "ti", "tj", "n", "focal_n")
 
 
 def q_geo_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2644,6 +2596,33 @@ def q_geo_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _user_points(spark: SparkSession, sf_dir: str, *geo: Column | str) -> DataFrame:
+    """(event_id, user_id, ts, *geo): every event joined to the ``geo``
+    columns of its persisted tiled row — the one events⋈geo equi-join under
+    the trajectory family.  ``geo`` is evaluated on the geo side of the
+    join; per-point math (xyz, radians) is selected above it."""
+    docs = events_geo(spark, sf_dir).select("event_id", *geo)
+    ev = _read(spark, sf_dir, "events", spread=False).select(
+        "event_id", "user_id", "ts"
+    )
+    return ev.join(docs, on="event_id")
+
+
+def _xyz() -> list[Column]:
+    """The row's (lat, lng) as unit-vector columns named x, y, z."""
+    return [c.alias(n) for c, n in zip(tiling.xyz_cols("lat", "lng"), "xyz")]
+
+
+def _step_chord2() -> Column:
+    """Squared chord between a step row's previous point (px, py, pz) and
+    its point (x, y, z), in the op order the oracles mirror."""
+    return (
+        (F.col("x") - F.col("px")) * (F.col("x") - F.col("px"))
+        + (F.col("y") - F.col("py")) * (F.col("y") - F.col("py"))
+        + (F.col("z") - F.col("pz")) * (F.col("z") - F.col("pz"))
+    )
+
+
 def q_trajectory_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user trajectory steps: for each user's events in (ts, event_id)
     order, the squared chord distance from the previous event — the
@@ -2655,44 +2634,11 @@ def q_trajectory_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream rollup can sum the rounded steps deterministically if it
     sorts first).  chord2 mirrors the oracle's operation order term for
     term; rounded to 7 dp because JVM and DuckDB libm trig differ by 1-4
-    ulp (the distance-join rationale).  Plan shape: ONE shuffle keyed by
-    user_id (the sessionize Exchange), lag + chord math in whole-stage
-    codegen."""
-    docs = events_geo(spark, sf_dir).select("event_id", "lat", "lng")
-    ev = _read(spark, sf_dir, "events", spread=False).select(
-        "event_id", "user_id", "ts"
-    )
-    la, ln = F.radians("lat"), F.radians("lng")
-    g = ev.join(docs, on="event_id").select(
-        "user_id",
-        "event_id",
-        "ts",
-        (F.cos(la) * F.cos(ln)).alias("x"),
-        (F.cos(la) * F.sin(ln)).alias("y"),
-        F.sin(la).alias("z"),
-    )
-    w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
-    g = g.select(
-        "user_id",
-        "event_id",
-        F.lag("event_id").over(w).alias("prev_event"),
-        F.lag("x").over(w).alias("px"),
-        F.lag("y").over(w).alias("py"),
-        F.lag("z").over(w).alias("pz"),
-        "x",
-        "y",
-        "z",
-    )
-    chord2 = (
-        (F.col("x") - F.col("px")) * (F.col("x") - F.col("px"))
-        + (F.col("y") - F.col("py")) * (F.col("y") - F.col("py"))
-        + (F.col("z") - F.col("pz")) * (F.col("z") - F.col("pz"))
-    )
-    return g.where(F.col("prev_event").isNotNull()).select(
-        "user_id",
-        "event_id",
-        "prev_event",
-        F.round(chord2, 7).alias("chord2_r"),
+    ulp (the distance-join rationale).  Plan shape: the shared
+    _traj_window step frame — ONE shuffle keyed by user_id (the sessionize
+    Exchange), lag + chord math in whole-stage codegen."""
+    return _traj_window(spark, sf_dir).select(
+        "user_id", "event_id", "prev_event", F.round(_step_chord2(), 7).alias("chord2_r")
     )
 
 
@@ -2716,20 +2662,8 @@ def q_trajectory_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); first/last points come from row_number flags folded into the
     same aggregate, not extra joins.  At 100 TB: shuffle volume is one row
     per event, state per key is O(1)."""
-    docs = events_geo(spark, sf_dir).select("event_id", "lat", "lng")
-    ev = _read(spark, sf_dir, "events", spread=False).select(
-        "event_id", "user_id", "ts"
-    )
-    la, ln = F.radians("lat"), F.radians("lng")
-    g = ev.join(docs, on="event_id").select(
-        "user_id",
-        "event_id",
-        "ts",
-        "lat",
-        "lng",
-        (F.cos(la) * F.cos(ln)).alias("x"),
-        (F.cos(la) * F.sin(ln)).alias("y"),
-        F.sin(la).alias("z"),
+    g = _user_points(spark, sf_dir, "lat", "lng").select(
+        "user_id", "event_id", "ts", "lat", "lng", *_xyz()
     )
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
@@ -2750,13 +2684,9 @@ def q_trajectory_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         "z",
     )
-    dx = F.col("x") - F.col("px")
-    dy = F.col("y") - F.col("py")
-    dz = F.col("z") - F.col("pz")
-    chord = F.sqrt(dx * dx + dy * dy + dz * dz)
     step_q = F.when(
         F.col("px").isNotNull(),
-        F.round(chord * F.lit(1e7), 0).cast("long"),
+        F.round(F.sqrt(_step_chord2()) * F.lit(1e7), 0).cast("long"),
     )
     g = g.withColumn("step_q", step_q)
 
@@ -2825,11 +2755,7 @@ def q_bearing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: ONE Exchange keyed by user_id; the two stacked Window
     operators share the partitioning and sort, so the second lag (over
     bearings) adds no shuffle and no re-sort."""
-    docs = events_geo(spark, sf_dir).select("event_id", "lat", "lng")
-    ev = _read(spark, sf_dir, "events", spread=False).select(
-        "event_id", "user_id", "ts"
-    )
-    g = ev.join(docs, on="event_id").select(
+    g = _user_points(spark, sf_dir, "lat", "lng").select(
         "user_id",
         "event_id",
         "ts",
@@ -2959,7 +2885,8 @@ def q_geo_training_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB table three times and shuffle it twice); the only doc-side
     join is against the (memoized) dedup labels; the focal table is
     GRID-BOUNDED (<= 6*4^L rows) and joins as a broadcast; the unbounded
-    events table is touched exactly once (inside focal_counts)."""
+    events table is touched exactly once (by the FOCAL_LEVEL _grid_counts
+    groupBy under _focal_table)."""
     lvl = specs.FOCAL_LEVEL
     focal = _focal_table(spark, sf_dir).select("tile", "focal_n")
 
@@ -3094,14 +3021,9 @@ def q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exchange on the (o_tile, d_tile) key; the flow table is grid-bounded
     (<= 36*16^L rows) regardless of corpus size.  Tile ids are pure bit
     Columns off the memoized tiled-events table."""
-    lvl = specs.OD_LEVEL
-    docs = events_geo(spark, sf_dir).select(
-        "event_id", tiling.parent_col("cell_id", lvl).alias("tile")
+    g = _user_points(
+        spark, sf_dir, tiling.parent_col("cell_id", specs.OD_LEVEL).alias("tile")
     )
-    ev = _read(spark, sf_dir, "events", spread=False).select(
-        "event_id", "user_id", "ts"
-    )
-    g = ev.join(docs, on="event_id")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -3139,14 +3061,7 @@ def q_voronoi_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (chord2_r is rounded only for display).  Plan shape: pure
     JVM-codegen map over the tiled table, zero shuffles, zero Python —
     at 100 TB this is a scan-speed operator."""
-    docs = events_geo(spark, sf_dir)
-    la, ln = F.radians("lat"), F.radians("lng")
-    d = docs.select(
-        "event_id",
-        (F.cos(la) * F.cos(ln)).alias("x"),
-        (F.cos(la) * F.sin(ln)).alias("y"),
-        F.sin(la).alias("z"),
-    )
+    d = events_geo(spark, sf_dir).select("event_id", *_xyz())
     dists = specs.voronoi_dist_sql()
     dcols = [f"d{i}" for i in range(len(dists))]
     d = d.withColumns({c: F.expr(e) for c, e in zip(dcols, dists)})
@@ -3320,7 +3235,8 @@ def q_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios (ROUND5.md session 6).
 
     Plan shape: the unbounded events table is touched only by the shared
-    memoized _focal_table build (ONE groupBy); everything after is
+    memoized _grid_counts build under _focal_table (ONE groupBy, then the
+    decode of the (face, ti, tj) output keys); everything after is
     grid-bounded (<= 6*4^L rows at ANY corpus size): a narrow Arrow
     neighbor-contribution stage + tiny groupBy persisted once per session,
     then ONE 1-row aggregate (den/num expanded algebraically over plain
@@ -3329,7 +3245,7 @@ def q_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
     milliseconds."""
     from ..kernel import hierarchy
 
-    counts = _focal_table(spark, sf_dir).select("tile", "n")
+    counts = _focal_table(spark, sf_dir).select("tile", "n", "face", "ti", "tj")
 
     def contrib(batches):
         # each occupied tile sends (count, 1) to its 4 FACE_WRAP edge
@@ -3349,7 +3265,8 @@ def q_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build_tbl() -> DataFrame:
         recv = (
-            counts.mapInPandas(contrib, schema="target long, c long")
+            counts.select("tile", "n")
+            .mapInPandas(contrib, schema="target long, c long")
             .groupBy("target")
             .agg(
                 F.sum("c").alias("nbr_sum"),
@@ -3359,7 +3276,9 @@ def q_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
         return counts.join(
             recv, counts["tile"] == recv["target"], "left"
         ).select(
-            "tile",
+            "face",
+            "ti",
+            "tj",
             "n",
             F.coalesce(F.col("nbr_sum"), F.lit(0).cast("long")).alias("nbr_sum"),
             F.coalesce(F.col("nn"), F.lit(0).cast("long")).alias("nn"),
@@ -3427,8 +3346,10 @@ def q_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     ).otherwise(F.lit(0)).cast("long")
-    tbl = tbl.select(
-        "tile",
+    return tbl.select(
+        "face",
+        "ti",
+        "tj",
         "n",
         "nn",
         "d",
@@ -3439,44 +3360,6 @@ def q_moran(spark: SparkSession, sf_dir: str) -> DataFrame:
         "num",
         "den",
         glob.alias("moran_e6f"),
-    )
-    sh = 30 - specs.FOCAL_LEVEL
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            t = pdf["tile"].to_numpy(np.int64)
-            face, i, j, _ = h.cellid_to_face_ij_orientation(t.view(np.uint64))
-            out = pd.DataFrame(
-                {
-                    "face": face.astype(np.int64),
-                    "ti": (i >> sh).astype(np.int64),
-                    "tj": (j >> sh).astype(np.int64),
-                }
-            )
-            for c in (
-                "n",
-                "nn",
-                "d",
-                "lnum",
-                "local_e6f",
-                "n_tiles",
-                "w_pairs",
-                "num",
-                "den",
-                "moran_e6f",
-            ):
-                out[c] = pdf[c].to_numpy(np.int64)
-            yield out
-
-    return tbl.mapInPandas(
-        decode,
-        schema=(
-            "face long, ti long, tj long, n long, nn long, d long, "
-            "lnum long, local_e6f long, n_tiles long, w_pairs long, "
-            "num long, den long, moran_e6f long"
-        ),
     )
 
 
@@ -3569,8 +3452,8 @@ def q_decay_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: ONE pass over events (scan -> pure-Column encode ->
     parent tile), a broadcast of the 1-row max-ts aggregate, ONE
-    grid-bounded groupBy, then the standard Arrow decode of <= 6*4^L
-    rows.  The unbounded table is never shuffled at full width."""
+    grid-bounded groupBy, then tiling.with_face_ij's Arrow decode of
+    <= 6*4^L rows.  The unbounded table is never shuffled at full width."""
     lvl = specs.FOCAL_LEVEL
     ev = _read(spark, sf_dir, "events", spread=False).select("event_id", "ts")
     lat_sql, lng_sql = specs.latlng_sql("event_id")
@@ -3599,28 +3482,8 @@ def q_decay_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decayed_e6",
         F.expr(f"(2000000 * num + {scale}) div (2 * {scale})"),
     )
-    sh = 30 - lvl
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            t = pdf["tile"].to_numpy(np.int64)
-            face, i, j2, _ = h.cellid_to_face_ij_orientation(t.view(np.uint64))
-            out = pd.DataFrame(
-                {
-                    "face": face.astype(np.int64),
-                    "ti": (i >> sh).astype(np.int64),
-                    "tj": (j2 >> sh).astype(np.int64),
-                }
-            )
-            for c in ("n", "num", "decayed_e6"):
-                out[c] = pdf[c].to_numpy(np.int64)
-            yield out
-
-    return agg.mapInPandas(
-        decode,
-        schema="face long, ti long, tj long, n long, num long, decayed_e6 long",
+    return tiling.with_face_ij(agg, lvl).select(
+        "face", "ti", "tj", "n", "num", "decayed_e6"
     )
 
 
@@ -3635,21 +3498,15 @@ def q_tile_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-up idiom (no log(), no engine round()) — the class of score the
     sf1 gate proved safe (ROUND5.md session 6).
 
-    Plan shape: the persisted geo table equi-joins events for user_id
-    (the _traj_window pattern), then TWO nested aggregates — (tile, user)
-    partial-agg Exchange, then a tile-keyed rollup whose input is already
-    one row per (tile, user).  No broadcast of anything unbounded; output
-    is grid-bounded.  The decode to engine-independent grid keys is the
-    standard Arrow stage over <= 6*4^L rows."""
+    Plan shape: the _user_points equi-join of events to the persisted geo
+    table, then TWO nested aggregates — (tile, user) partial-agg Exchange,
+    then a tile-keyed rollup whose input is already one row per (tile,
+    user).  No broadcast of anything unbounded; output is grid-bounded.
+    The decode to engine-independent grid keys is tiling.with_face_ij's
+    Arrow stage over <= 6*4^L rows."""
     lvl = specs.FOCAL_LEVEL
-    ev = _read(spark, sf_dir, "events", spread=False).select(
-        "event_id", "user_id"
-    )
-    geo = events_geo(spark, sf_dir).select(
-        "event_id", tiling.parent_col("cell_id", lvl).alias("tile")
-    )
     per_u = (
-        geo.join(ev, on="event_id")
+        _user_points(spark, sf_dir, tiling.parent_col("cell_id", lvl).alias("tile"))
         .groupBy("tile", "user_id")
         .agg(F.count(F.lit(1)).alias("cu"))
     )
@@ -3662,29 +3519,8 @@ def q_tile_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(2000000 * (n * n - sumsq) + n * n) div (2 * n * n)"
     )
     per_t = per_t.withColumn("simpson_e6", simpson)
-    sh = 30 - lvl
-
-    def decode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            t = pdf["tile"].to_numpy(np.int64)
-            face, i, j, _ = h.cellid_to_face_ij_orientation(t.view(np.uint64))
-            out = pd.DataFrame(
-                {
-                    "face": face.astype(np.int64),
-                    "ti": (i >> sh).astype(np.int64),
-                    "tj": (j >> sh).astype(np.int64),
-                }
-            )
-            for c in ("n", "u_cnt", "sumsq", "simpson_e6"):
-                out[c] = pdf[c].to_numpy(np.int64)
-            yield out
-
-    return per_t.mapInPandas(
-        decode,
-        schema="face long, ti long, tj long, n long, u_cnt long, "
-        "sumsq long, simpson_e6 long",
+    return tiling.with_face_ij(per_t, lvl).select(
+        "face", "ti", "tj", "n", "u_cnt", "sumsq", "simpson_e6"
     )
 
 
@@ -3782,18 +3618,8 @@ def _traj_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_ts, px/py/pz, x/y/z) — the lag-window primitive under
     trajectory_step / step_midpoint / speed_filter / waypoints.  ONE
     user_id Exchange; xyz trig in whole-stage codegen."""
-    docs = events_geo(spark, sf_dir).select("event_id", "lat", "lng")
-    ev = _read(spark, sf_dir, "events", spread=False).select(
-        "event_id", "user_id", "ts"
-    )
-    la, ln = F.radians("lat"), F.radians("lng")
-    g = ev.join(docs, on="event_id").select(
-        "user_id",
-        "event_id",
-        "ts",
-        (F.cos(la) * F.cos(ln)).alias("x"),
-        (F.cos(la) * F.sin(ln)).alias("y"),
-        F.sin(la).alias("z"),
+    g = _user_points(spark, sf_dir, "lat", "lng").select(
+        "user_id", "event_id", "ts", *_xyz()
     )
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     return g.select(
@@ -3817,13 +3643,8 @@ def _step_dt_dist_cols() -> tuple[Column, Column]:
     q_speed_filter and q_stay_points so the stay detector's "identical op
     tree, exactness inherited" claim is structural, not copy-paste."""
     dt = F.expr("timestampdiff(MICROSECOND, prev_ts, ts)")
-    chord2 = (
-        (F.col("x") - F.col("px")) * (F.col("x") - F.col("px"))
-        + (F.col("y") - F.col("py")) * (F.col("y") - F.col("py"))
-        + (F.col("z") - F.col("pz")) * (F.col("z") - F.col("pz"))
-    )
     dist = F.round(
-        F.degrees(2.0 * F.asin(0.5 * F.sqrt(F.least(chord2, F.lit(4.0))))), 6
+        F.degrees(2.0 * F.asin(0.5 * F.sqrt(F.least(_step_chord2(), F.lit(4.0))))), 6
     )
     return dt, dist
 
@@ -3893,12 +3714,7 @@ def q_waypoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp-scale |w| > 1 can never NaN.  Plan shape: ONE user_id Exchange,
     then a 3x explode of the step frame — no Python, no second shuffle."""
     st = _traj_window(spark, sf_dir)
-    chord2 = (
-        (F.col("x") - F.col("px")) * (F.col("x") - F.col("px"))
-        + (F.col("y") - F.col("py")) * (F.col("y") - F.col("py"))
-        + (F.col("z") - F.col("pz")) * (F.col("z") - F.col("pz"))
-    )
-    theta = 2.0 * F.asin(0.5 * F.sqrt(F.least(chord2, F.lit(4.0))))
+    theta = 2.0 * F.asin(0.5 * F.sqrt(F.least(_step_chord2(), F.lit(4.0))))
     d = st.select(
         "user_id",
         "event_id",
@@ -3965,20 +3781,13 @@ def q_traj_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
     an Arrow batch boundary is carried into the next batch (the batch cut
     is the only place a user could split — partitioning guarantees all
     their rows are in this partition, sorted)."""
-    docs = events_geo(spark, sf_dir).select("event_id", "lat", "lng")
-    ev = _read(spark, sf_dir, "events", spread=False).select(
-        "event_id", "user_id", "ts"
-    )
-    la, ln = F.radians("lat"), F.radians("lng")
-    g = ev.join(docs, on="event_id").select(
+    g = _user_points(spark, sf_dir, "lat", "lng").select(
         "user_id",
         "event_id",
         F.expr(
             "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
         ).alias("ts_us"),
-        (F.cos(la) * F.cos(ln)).alias("x"),
-        (F.cos(la) * F.sin(ln)).alias("y"),
-        F.sin(la).alias("z"),
+        *_xyz(),
     )
     n = spark.sparkContext.defaultParallelism
     g = g.repartition(n, F.col("user_id")).sortWithinPartitions(
@@ -4122,7 +3931,9 @@ def line_crossing_frame(st: DataFrame, points: bool = False) -> DataFrame:
     streaming pipeline so both run the IDENTICAL codegen predicate.
 
     ``points=True`` additionally emits the great-circle intersection
-    coordinates (the get_intersection analog) for each crossing."""
+    coordinates for each crossing: the naive (ab x cd) form of
+    edge_crossings.rs::intersection, without its stable/exact fallbacks —
+    enough for the banded proper crossings kept here at 6 dp."""
     segs = []
     for i, (c, d) in enumerate(specs.polyline_segments_xyz()):
         cd = (
@@ -4173,8 +3984,9 @@ def line_crossing_frame(st: DataFrame, points: bool = False) -> DataFrame:
     ]
     if points:
         # intersection = (ab x cd), sign-oriented toward the arc midpoint
-        # chord (a+b), normalized — edgeutil.rs get_intersection semantics
-        # for a proper crossing.  Op order mirrored by the oracle.
+        # chord (a+b), normalized — edge_crossings.rs::intersection for a
+        # proper crossing, without its stable/exact fallbacks.  Op order
+        # mirrored by the oracle.
         lat, lng = _intersection_latlng_cols(
             (abx, aby, abz),
             (F.col("s.cdx"), F.col("s.cdy"), F.col("s.cdz")),
@@ -4420,12 +4232,8 @@ def q_traj_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     lvl = specs.TRAJ_JACCARD_LEVEL
 
     def _build() -> DataFrame:
-        docs = events_geo(spark, sf_dir).select("event_id", "cell_id")
-        ev = _read(spark, sf_dir, "events", spread=False).select(
-            "event_id", "user_id"
-        )
         ut = (
-            ev.join(docs, on="event_id")
+            _user_points(spark, sf_dir, "cell_id")
             .select("user_id", tiling.parent_col("cell_id", lvl).alias("tile"))
             .distinct()
         )
@@ -4488,9 +4296,7 @@ def q_rasterize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiled = docs.withColumn("tile", tiling.parent_col("cell_id", RASTER_LEVEL))
     rid, ring = specs.POLYGONS[0]
     verts = specs.polygon_vertices_xyz(ring)
-    px = F.cos(F.radians("lat")) * F.cos(F.radians("lng"))
-    py = F.cos(F.radians("lat")) * F.sin(F.radians("lng"))
-    pz = F.sin(F.radians("lat"))
+    px, py, pz = tiling.xyz_cols("lat", "lng")
     inside = F.lit(True)
     margin = F.lit(True)
     n = len(verts)

@@ -445,14 +445,8 @@ def _traj_xyz_cols(df: DataFrame, id_col: str) -> DataFrame:
         F.expr(lat_sql).alias("lat"),
         F.expr(lng_sql).alias("lng"),
     )
-    la, ln = F.radians("lat"), F.radians("lng")
-    return g.select(
-        "user_id",
-        "event_id",
-        (F.cos(la) * F.cos(ln)).alias("x"),
-        (F.cos(la) * F.sin(ln)).alias("y"),
-        F.sin(la).alias("z"),
-    )
+    x, y, z = tiling.xyz_cols("lat", "lng")
+    return g.select("user_id", "event_id", x.alias("x"), y.alias("y"), z.alias("z"))
 
 
 def stream_trajectory(spark: SparkSession, rows_per_batch: int = 500) -> DataFrame:

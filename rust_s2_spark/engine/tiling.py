@@ -2,9 +2,10 @@
 
 The leaf encode is pure Column math (trig, face/uv/st projection, then the
 8-round 4-bit Hilbert walk, cellid.rs:135-154), so no row is sent to Python
-to be tiled; the one Arrow stage here is ``focal_counts``' neighbour explode
-over a grid-bounded count table. Everything downstream — parent truncation,
-range endpoints, level, validity — is Spark SQL bit arithmetic
+to be tiled; the Arrow stages here run over grid-bounded tile tables only
+(``with_face_ij``'s grid-coordinate decode, ``focal_counts``' neighbour
+explode). Everything downstream — parent truncation, range endpoints,
+level, validity — is Spark SQL bit arithmetic
 (cellid.rs:265-268, 442-449 semantics), so Catalyst codegens it and can
 partition/prune on tile columns with no Python round-trip.
 
@@ -38,6 +39,9 @@ __all__ = [
     "range_max_col",
     "is_valid_col",
     "face_col",
+    "xyz_cols",
+    "tile_face_ij",
+    "with_face_ij",
 ]
 
 
@@ -70,6 +74,14 @@ def cellid_to_token_udf():
     return _token
 
 
+def xyz_cols(lat: Column | str, lng: Column | str) -> tuple[Column, Column, Column]:
+    """(lat, lng) degrees -> unit-vector (x, y, z) Columns.  The op order
+    (cos·cos, cos·sin, sin of the radians) is the one the oracle SQL
+    mirrors, so every engine-side lat/lng -> xyz goes through here."""
+    la, ln = F.radians(lat), F.radians(lng)
+    return F.cos(la) * F.cos(ln), F.cos(la) * F.sin(ln), F.sin(la)
+
+
 def with_leaf_cellid(
     df: DataFrame,
     lat_col: str = "lat",
@@ -100,17 +112,9 @@ def with_leaf_cellid(
       fallback).  The value is exactly deterministic, so re-execution is
       safe; unused-column pruning still removes the encode entirely.
     """
-    lat, lng = F.col(lat_col), F.col(lng_col)
     P = "__s2_"  # temp-column prefix, dropped at the end
-    lat_r, lng_r = F.radians(lat), F.radians(lng)
-    df = df.withColumns(
-        {
-            P + "x": F.cos(lat_r) * F.cos(lng_r),
-            P + "y": F.cos(lat_r) * F.sin(lng_r),
-            P + "z": F.sin(lat_r),
-        }
-    )
-    return _leaf_walk(df, out)
+    xyz = dict(zip((P + "x", P + "y", P + "z"), xyz_cols(lat_col, lng_col)))
+    return _leaf_walk(df.withColumns(xyz), out)
 
 
 def with_leaf_cellid_xyz(
@@ -254,19 +258,55 @@ def is_valid_col(cell: Column | str) -> Column:
     return face_ok & lsb_ok
 
 
+def tile_face_ij(
+    tiles: np.ndarray, level: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """int64 level-``level`` CellIDs -> int64 grid coordinates (face, ti,
+    tj): the cell's face and its leaf (i, j) shifted down to level units
+    (cellid.rs:303-331)."""
+    face, i, j, _ = hilbert.cellid_to_face_ij_orientation(tiles.view(np.uint64))
+    sh = MAX_LEVEL - level
+    return face.astype(np.int64), (i >> sh).astype(np.int64), (j >> sh).astype(np.int64)
+
+
+def with_face_ij(df: DataFrame, level: int) -> DataFrame:
+    """Append the grid coordinates (face, ti, tj) of the level-``level``
+    ``tile`` column, passing every other column through unchanged.
+
+    One Arrow stage (there is no Column inverse Hilbert walk), so it is
+    meant for grid-bounded tables (<= 6*4^level rows).  Every column is
+    bigint in and out: the result-hash compare against the oracle wants
+    type-identical columns on both engines."""
+    other = [c for c, t in df.dtypes if t != "bigint"]
+    if other:
+        raise TypeError(f"with_face_ij passes bigint columns only, got {other}")
+
+    def decode(batches):
+        for pdf in batches:
+            pdf["face"], pdf["ti"], pdf["tj"] = tile_face_ij(
+                pdf["tile"].to_numpy(np.int64), level
+            )
+            yield pdf
+
+    schema = ", ".join(f"`{c}` long" for c in [*df.columns, "face", "ti", "tj"])
+    return df.mapInPandas(decode, schema=schema)
+
+
 def focal_counts(counts: DataFrame, tile_col: str = "tile", n_col: str = "n") -> DataFrame:
     """Rook focal sum over a per-tile count table: for every tile present,
     ``focal_n = n(tile) + sum(n over its 4 FACE_WRAP edge neighbors)`` —
     the sphere's analog of a 3x3 convolution (cellid.rs:336-347 adjacency).
 
-    Input: (tile, n) with one row per occupied same-level cell.  The
+    Input: one row per occupied same-level cell, keyed by ``tile_col`` and
+    counted in ``n_col``; output: the input renamed to (tile, n), every
+    other input column carried through, plus focal_n.  The
     contribution explode (each tile sends its count to itself + 4
     neighbors) is a narrow Arrow stage over the GRID-BOUNDED count table
     (<= 6*4^L rows at any corpus size), so the focal groupBy and the final
     equi-join shuffle only grid-bounded data."""
     from ..kernel import hierarchy
 
-    counts = counts.select(F.col(tile_col).alias("tile"), F.col(n_col).alias("n"))
+    counts = counts.withColumnsRenamed({tile_col: "tile", n_col: "n"})
 
     def contrib(batches):
         for pdf in batches:
@@ -285,10 +325,9 @@ def focal_counts(counts: DataFrame, tile_col: str = "tile", n_col: str = "n") ->
             )
 
     focal = (
-        counts.mapInPandas(contrib, schema="target long, c long")
+        counts.select("tile", "n")
+        .mapInPandas(contrib, schema="target long, c long")
         .groupBy("target")
         .agg(F.sum("c").alias("focal_n"))
     )
-    return counts.join(focal, counts["tile"] == focal["target"]).select(
-        "tile", "n", "focal_n"
-    )
+    return counts.join(focal, counts["tile"] == focal["target"]).drop("target")

@@ -143,3 +143,34 @@ def test_column_encode_deterministic_across_executions(spark):
     fresh = tiling.with_leaf_cellid(df)
     b = {r["event_id"]: r["cell_id"] for r in fresh.select("event_id", "cell_id").collect()}
     assert a == b
+
+
+@pytest.mark.parametrize("level", [0, 4, 6, 30])
+def test_with_face_ij_matches_kernel(spark, level):
+    """The one tile -> (face, ti, tj) decode: random level-``level`` tiles
+    against the kernel's (i, j) shifted down to level units; every other
+    column passes through, the schema is all bigint, and partitions with
+    no rows decode to nothing."""
+    from rust_s2_spark.kernel import hilbert
+
+    rng = np.random.default_rng(level)
+    leaves = hilbert.cellid_from_latlng(
+        rng.uniform(-90.0, 90.0, 200), rng.uniform(-180.0, 180.0, 200)
+    )
+    tiles = h.parent(leaves, level).view(np.int64)
+    df = spark.createDataFrame(
+        [(int(t), k, 7) for k, t in enumerate(tiles)], "tile long, k long, g long"
+    ).repartition(4, "g")  # one key: three of the four partitions are empty
+    assert sorted(df.rdd.glom().map(len).collect()) == [0, 0, 0, len(tiles)]
+    out = tiling.with_face_ij(df, level)
+    assert out.columns == ["tile", "k", "g", "face", "ti", "tj"]
+    assert {t for _, t in out.dtypes} == {"bigint"}
+    got = out.toPandas().sort_values("k")
+    assert got["k"].tolist() == list(range(len(tiles)))
+    assert np.array_equal(got["tile"].to_numpy(np.int64), tiles)
+    assert (got["g"] == 7).all()
+    face, i, j, _ = h.cellid_to_face_ij_orientation(tiles.view(np.uint64))
+    sh = 30 - level
+    assert np.array_equal(got["face"].to_numpy(np.int64), face.astype(np.int64))
+    assert np.array_equal(got["ti"].to_numpy(np.int64), (i >> sh).astype(np.int64))
+    assert np.array_equal(got["tj"].to_numpy(np.int64), (j >> sh).astype(np.int64))

@@ -331,8 +331,9 @@ def test_idw_smooth_matches_numpy(spark):
 
 
 def test_crossing_points_matches_python(spark):
-    """Python replay of the crossing predicate + get_intersection chain
-    (same IEEE ops in the same order => bit-identical doubles), vs the
+    """Python replay of the crossing predicate + the
+    edge_crossings.rs::intersection chain (same IEEE ops in the same order
+    => bit-identical doubles), vs the
     Spark codegen output at sf0.001."""
     from rust_s2_spark.engine.queries import QUERIES, clear_geo_cache
 

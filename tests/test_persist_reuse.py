@@ -139,3 +139,37 @@ def test_untagged_refine_is_held_until_clear(spark):
 
     Q.clear_geo_cache()
     assert _n_broadcasts() == 0
+
+
+def test_focal_level_counts_are_memoized_once(spark):
+    """s2_focal_density's focal table and s2_idw_smooth's grid counts group
+    events_geo by the same FOCAL_LEVEL tile: one memoized frame does that
+    aggregation and the other reads it.  A frame's own work is its analyzed
+    plan down to, not into, fragments another persisted frame caches."""
+    from pyspark.sql import DataFrame
+
+    from rust_s2_spark.engine import specs
+
+    session = spark._jsparkSession
+    cache = session.sharedState().cacheManager()
+    lsb = 1 << (2 * (30 - specs.FOCAL_LEVEL))
+
+    def aggregates_focal_tiles(df):
+        stack = [(df._jdf.queryExecution().analyzed(), True)]
+        while stack:
+            node, root = stack.pop()
+            if not root and cache.lookupCachedData(session, node).isDefined():
+                continue
+            keys = str(node.groupingExpressions()) if node.nodeName() == "Aggregate" else ""
+            if "cell_id" in keys and f"-{lsb})" in keys:
+                return True
+            kids = node.children()
+            stack.extend((kids.apply(i), False) for i in range(kids.size()))
+        return False
+
+    Q.clear_geo_cache()
+    Q.q_focal_density(spark, SF)
+    Q.q_idw_smooth(spark, SF)
+    frames = [v for v in M.held() if isinstance(v, DataFrame)]
+    assert sum(aggregates_focal_tiles(f) for f in frames) == 1
+    Q.clear_geo_cache()

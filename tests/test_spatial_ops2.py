@@ -309,8 +309,8 @@ def test_traj_simplify_matches_numpy(spark):
 
 def test_self_intersect_matches_numpy(spark):
     """Third direction for s2_self_intersect: the banded-join candidate set,
-    the simple_crossing predicate, and the get_intersection point chain vs
-    an explicit per-user double loop in numpy — plus the exactness
+    the simple_crossing predicate, and the edge_crossings.rs::intersection
+    point chain vs an explicit per-user double loop in numpy — plus the exactness
     precondition (every |sign product| across every CANDIDATE pair clears
     the ~1e-15 product noise floor by orders of magnitude; both segments
     are trig-derived here, unlike s2_line_crossings' literal fence)."""
